@@ -292,6 +292,34 @@ def attribution_fold_batch(
     return new_state, delta
 
 
+def _merge_channel_totals(prev: DataFrame, delta: DataFrame) -> DataFrame:
+    """Additive merge of per-channel totals: sum every non-channel
+    column — shared by both attribution twins, batch and streaming."""
+    cols = [c for c in delta.columns if c != "channel"]
+    return prev.unionByName(delta).groupBy("channel").agg(
+        *[F.sum(c).alias(c) for c in cols]
+    )
+
+
+def _fold_channel_totals(batches: list[DataFrame], fold_fn) -> DataFrame:
+    """The batch driver of the two-part attribution folds: carry the
+    per-key state through ``fold_fn(state_or_None, batch)`` ->
+    (new_state, credit_delta) and sum the additive credit deltas. The
+    key state needs no checkpoint of its own — it is a projection of the
+    fold's localCheckpoint-ed walk — so only the totals are truncated
+    per round. The streaming twin is streaming/ivm.py
+    ``_two_state_stream_fold``."""
+    if not batches:
+        raise ValueError("attribution folds need at least one batch")
+    state, totals = None, None
+    for batch in batches:
+        state, delta = fold_fn(state, batch)
+        if totals is not None:
+            delta = _merge_channel_totals(totals, delta)
+        totals = delta.localCheckpoint()
+    return totals
+
+
 def incremental_attribution_batches(
     batches: list[DataFrame],
     touch_types: tuple[str, ...] = ("view", "click"),
@@ -306,80 +334,14 @@ def incremental_attribution_batches(
     """Fold a time-ordered batch sequence through
     ``attribution_fold_batch``, summing the additive credit deltas —
     must equal the one-shot ``last_touch_attribution`` over the union
-    for ANY time-split batching. localCheckpoint per round for BOTH the
-    carried key state and the accumulated totals (house rule)."""
-    state, totals = None, None
-    for batch in batches:
-        state, delta = attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
+    for ANY time-split batching."""
+    return _fold_channel_totals(
+        batches,
+        lambda s, b: attribution_fold_batch(
+            s, b, touch_types, conversion_type, window_us,
             key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-        state = state.localCheckpoint()
-        totals = delta if totals is None else totals.unionByName(delta)
-        totals = (
-            totals.groupBy("channel")
-            .agg(
-                F.sum("n_conversions").alias("n_conversions"),
-                F.sum("attributed_cents").alias("attributed_cents"),
-            )
-            .localCheckpoint()
-        )
-    assert totals is not None, "need at least one batch"
-    return totals
-
-
-def incremental_attribution_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_attribution_batches`` with the carried KEY state
-    (last touch + fold frontier) as a catalog table bucketed on ``key``
-    — the fold's full-outer state⋈batch join consumes the state side
-    exchange-free exactly as the EMA/CUSUM members do (shared
-    ``frontier_ordered_join`` scaffold; plan-asserted in
-    tests/test_bucketing.py). The two-part result keeps its commit
-    order: the fold is materialized inside ``attribution_fold_batch``
-    (the shared localCheckpoint) BEFORE the state overwrite lands, so
-    the round reads exactly the pre-round state. The ADDITIVE channel
-    totals are channel-cardinality-sized — they stay a driver-held
-    accumulator here (the streaming twin is where their crash-safe
-    commit protocol lives, streaming/ivm.py)."""
-    from etl_pipeline_last_fm_spark.sources.bucketing import write_bucketed
-
-    if not batches:
-        raise ValueError(
-            "incremental_attribution_batches_bucketed needs >= 1 batch"
-        )
-    totals = None
-    for t, batch in enumerate(batches):
-        prev = spark.table(table_name) if t else None
-        state, delta = attribution_fold_batch(
-            prev, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-        # state/delta both derive from the fold's own localCheckpoint,
-        # so the overwrite below cannot invalidate them.
-        write_bucketed(state, table_name, ["key"], n_buckets=n_buckets)
-        totals = delta if totals is None else totals.unionByName(delta)
-        totals = (
-            totals.groupBy("channel")
-            .agg(
-                F.sum("n_conversions").alias("n_conversions"),
-                F.sum("attributed_cents").alias("attributed_cents"),
-            )
-            .localCheckpoint()
-        )
-    return totals
+        ),
+    )
 
 
 def decay_attribution_fold_batch(
@@ -551,23 +513,13 @@ def incremental_decay_attribution_batches(
     union for ANY time-split batching, with per-key state bounded by the
     recency window throughout (the eviction makes this the first member
     whose state does NOT grow with history)."""
-    state, totals = None, None
-    for batch in batches:
-        state, delta = decay_attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
+    return _fold_channel_totals(
+        batches,
+        lambda s, b: decay_attribution_fold_batch(
+            s, b, touch_types, conversion_type, window_us,
             key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-        totals = delta if totals is None else totals.unionByName(delta)
-        totals = (
-            totals.groupBy("channel")
-            .agg(
-                F.sum("n_credited_touches").alias("n_credited_touches"),
-                F.sum("credited_cents").alias("credited_cents"),
-            )
-            .localCheckpoint()
-        )
-    assert totals is not None, "need at least one batch"
-    return totals
+        ),
+    )
 
 
 def time_decay_attribution_oracle_sql(

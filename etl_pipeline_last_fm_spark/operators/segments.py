@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.functions.scalar import half_up_round, ts_us
+from etl_pipeline_last_fm_spark.operators.incremental import fold_batches
 
 
 def rfm_segments(
@@ -356,70 +357,10 @@ def incremental_twap_batches(
     and present (key, n_events, span_us, twap_cents) — must equal
     ``time_weighted_avg`` over the union for ANY time-split batching
     (the ordered-fold maintenance identity; the one-shot IS the
-    oracle). localCheckpoint per round, the iterative house rule."""
-    state = None
-    for batch in batches:
-        state = twap_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ).localCheckpoint()
-    assert state is not None, "need at least one batch"
-    return present_twap_state(state, key_col)
-
-
-def incremental_twap_batches_bucketed(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_twap_batches`` over the bucketed OVERWRITE layout
-    (operators/timeseries.fold_batches_bucketed — the state-side-
-    exchange-free join, plan-asserted in tests/test_bucketing.py for
-    this member too). Presents the time_weighted_avg shape."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        fold_batches_bucketed,
-    )
-
-    state = fold_batches_bucketed(
-        spark,
+    oracle), driven by ``fold_batches``."""
+    state = fold_batches(
         batches,
-        table_name,
         lambda s, b: twap_fold_batch(s, b, key_col, ts_col, value_col,
                                      tiebreak_col),
-        n_buckets=n_buckets,
     )
     return present_twap_state(state, key_col)
-
-
-def incremental_twap_batches_versioned(
-    spark,
-    batches: list[DataFrame],
-    table_name: str,
-    n_buckets: int = 8,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """``incremental_twap_batches`` over the VERSIONED append-only
-    layout (operators/timeseries.fold_batches_versioned): O(batch-keys)
-    writes, exchange-free latest-per-key reads, the decimal(38,0)
-    integral carried through the parquet rounds intact."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        fold_batches_versioned,
-    )
-
-    final = fold_batches_versioned(
-        spark,
-        batches,
-        table_name,
-        lambda s, b: twap_fold_batch(s, b, key_col, ts_col, value_col,
-                                     tiebreak_col),
-        key_col,
-        n_buckets=n_buckets,
-    )
-    return present_twap_state(final, key_col)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_pipeline_last_fm_spark.operators.incremental import fold_batches
+
 
 def skyline_2d(
     points: DataFrame,
@@ -123,6 +125,32 @@ def skyline_2d_oracle_sql(
     """
 
 
+def skyline_fold_batch(
+    state: DataFrame | None,
+    batch: DataFrame,
+    id_col: str,
+    cost_col: str,
+    gain_col: str,
+    bucket_width: int = 1000,
+) -> DataFrame:
+    """One maintained-skyline step: state' = skyline(state ∪ batch) —
+    the FRONTIER-STATE member of the IVM family, exact because dominance
+    only ever REMOVES points:
+        skyline(A ∪ B) = skyline(skyline(A) ∪ B)
+    (any point dominated within A is dominated in A ∪ B by the same
+    witness, and a surviving witness of the dominator chain is itself in
+    skyline(A)). Unlike the ordered folds (ema/holt/twap) this identity
+    is SET-algebraic: it holds for ANY partition of the input, in any
+    order — no delivery contract, no frontier timestamps, and a replayed
+    batch is harmless (skyline is idempotent on already-folded points).
+    Shared by ``skyline_fold_batches`` and the streaming twin
+    (streaming/sketch.py ``guarded_fold``)."""
+    pts = batch.select(id_col, cost_col, gain_col)
+    if state is not None:
+        pts = state.unionByName(pts)
+    return skyline_2d(pts, id_col, cost_col, gain_col, bucket_width=bucket_width)
+
+
 def skyline_fold_batches(
     batches: list[DataFrame],
     id_col: str,
@@ -130,31 +158,16 @@ def skyline_fold_batches(
     gain_col: str,
     bucket_width: int = 1000,
 ) -> DataFrame:
-    """Incrementally-maintained skyline — the FRONTIER-STATE member of
-    the IVM family: carried state is the current Pareto frontier, and
-    one batch folds in as  state' = skyline(state ∪ batch),  which is
-    exact because dominance only ever REMOVES points:
-        skyline(A ∪ B) = skyline(skyline(A) ∪ B)
-    (any point dominated within A is dominated in A ∪ B by the same
-    witness, and a surviving witness of the dominator chain is itself in
-    skyline(A)). Unlike the ordered folds (ema/holt/twap) this identity
-    is SET-algebraic: it holds for ANY partition of the input, in any
-    order — no delivery contract, no frontier timestamps.
-
-    Scale posture: the carried state is frontier-sized (for 2-D uniform
-    data, O(log n) expected), so each round costs skyline(tiny ∪ batch)
-    — the same bucket + carry plan as the one-shot, with the state
-    riding along as a few extra rows. The one-shot ``skyline_2d`` over
-    the union IS the oracle (maintenance identity). localCheckpoint per
-    round truncates lineage, the iterative house rule."""
-    if not batches:
-        raise ValueError("skyline_fold_batches needs >= 1 batch")
-    state = None
-    for batch in batches:
-        pts = batch.select(id_col, cost_col, gain_col)
-        if state is not None:
-            pts = state.unionByName(pts)
-        state = skyline_2d(
-            pts, id_col, cost_col, gain_col, bucket_width=bucket_width
-        ).localCheckpoint()
-    return state
+    """Incrementally-maintained skyline: ``skyline_fold_batch`` over the
+    batches through ``fold_batches``. Scale posture: the carried state
+    is frontier-sized (for 2-D uniform data, O(log n) expected), so each
+    round costs skyline(tiny ∪ batch) — the same bucket + carry plan as
+    the one-shot, with the state riding along as a few extra rows. The
+    one-shot ``skyline_2d`` over the union IS the oracle (maintenance
+    identity)."""
+    return fold_batches(
+        batches,
+        lambda s, b: skyline_fold_batch(
+            s, b, id_col, cost_col, gain_col, bucket_width
+        ),
+    )

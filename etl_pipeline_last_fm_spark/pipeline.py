@@ -415,10 +415,8 @@ def run_dm_streaming(spark: SparkSession, wh: Warehouse, run_date: str | Date) -
         raise RuntimeError("DDS layer empty — run run_dds first")
     from etl_pipeline_last_fm_spark.functions.scalar import round2
     from etl_pipeline_last_fm_spark.schemas import ROYALTY_RATE
-    from etl_pipeline_last_fm_spark.streaming.marts import (
-        read_state,
-        streaming_mart_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.marts import mart_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     fact_path = wh.dds("fact_daily_top_100")
     ck = os.path.join(wh.root, "_checkpoints")
@@ -433,7 +431,7 @@ def run_dm_streaming(spark: SparkSession, wh: Warehouse, run_date: str | Date) -
     # undercount — coalescing to 0 makes c = COUNT(*) while adding 0 to
     # the royalties SUM, i.e. exactly the batch marts' semantics.
     q1 = (
-        streaming_mart_maintenance(
+        fold_stream(
             fact_stream.select(
                 "date",
                 "artist_id",
@@ -442,8 +440,9 @@ def run_dm_streaming(spark: SparkSession, wh: Warehouse, run_date: str | Date) -
                 ),
             ),
             st_listeners,
-            ["date", "artist_id"],
-            "listeners_count",
+            lambda s, b: mart_fold_batch(
+                s, b, ["date", "artist_id"], "listeners_count"
+            ),
             checkpoint=os.path.join(ck, "dm_listeners"),
         )
         .trigger(availableNow=True)
@@ -465,11 +464,12 @@ def run_dm_streaming(spark: SparkSession, wh: Warehouse, run_date: str | Date) -
         .select("date", "country_id", "duration_sec")
     )
     q2 = (
-        streaming_mart_maintenance(
+        fold_stream(
             dur_stream,
             st_duration,
-            ["date", "country_id"],
-            "duration_sec",
+            lambda s, b: mart_fold_batch(
+                s, b, ["date", "country_id"], "duration_sec"
+            ),
             checkpoint=os.path.join(ck, "dm_duration"),
         )
         .trigger(availableNow=True)

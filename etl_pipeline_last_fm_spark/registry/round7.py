@@ -108,22 +108,18 @@ def run_file_sliced_stream(spark, slices, maintenance, read_state, present):
 
 
 def q_streaming_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `ema_fold` (streaming/ivm.py): per-batch
-    ema_fold_stream_batch under the versioned-commit replay guard, with
-    the out-of-order raise preserved. Oracle: the one-shot
+    """Streaming twin of `ema_fold`: per-batch ema_fold_batch under
+    streaming/sketch.py guarded_fold (the versioned-commit replay guard),
+    with the out-of-order raise preserved. Oracle: the one-shot
     ema_halflife."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_ema_state,
-        streaming_ema_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_ema_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_ema_state,
+        lambda stream, state, ck: fold_stream(stream, state, ema_fold_batch, ck),
+        read_state,
         lambda df: df.select(
             F.col("key").alias("user_id"), "n_events", "ema_cents"
         ),
@@ -155,22 +151,24 @@ def q_cusum_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `cusum_fold` (streaming/ivm.py): per-batch
-    cusum_fold_stream_batch under the versioned-commit replay guard.
-    Oracle: the one-shot cusum_alarms."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_cusum_state,
-        streaming_cusum_maintenance,
-    )
+    """Streaming twin of `cusum_fold`: per-batch cusum_fold_batch under
+    streaming/sketch.py guarded_fold. Oracle: the one-shot
+    cusum_alarms."""
+    from etl_pipeline_last_fm_spark.operators.timeseries import cusum_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_cusum_maintenance(
-            stream, state, drift_cents=_CUSUM_DRIFT,
-            threshold_cents=_CUSUM_H, checkpoint=ck,
+        lambda stream, state, ck: fold_stream(
+            stream,
+            state,
+            lambda s, b: cusum_fold_batch(
+                s, b, drift_cents=_CUSUM_DRIFT, threshold_cents=_CUSUM_H
+            ),
+            ck,
         ),
-        read_cusum_state,
+        read_state,
         lambda df: df.select(
             F.col("key").alias("user_id"),
             "n_events", "cusum_final", "cusum_max", "n_alarms",
@@ -206,18 +204,20 @@ def q_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals LAST as the replay guard — the join fold's m-last rule)
     under the same time-sliced availableNow stream. Oracle: the
     one-shot last_touch_attribution."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_attribution_state,
-        streaming_attribution_maintenance,
+    from etl_pipeline_last_fm_spark.operators.attribution import (
+        attribution_fold_batch,
     )
+    from etl_pipeline_last_fm_spark.streaming.ivm import _two_state_stream_fold
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_attribution_maintenance(
-            stream, state, checkpoint=ck
+        lambda stream, state, ck: fold_stream(
+            stream, state, attribution_fold_batch, ck,
+            protocol=_two_state_stream_fold,
         ),
-        read_attribution_state,
+        lambda spark, root: read_state(spark, f"{root}/c"),
         lambda df: df.select("channel", "n_conversions", "attributed_cents"),
     )
 
@@ -285,18 +285,20 @@ def q_streaming_attribution_decay(spark: SparkSession, sf_dir: str) -> DataFrame
     """Streaming twin of `attribution_decay_fold` (streaming/ivm.py):
     the two-state commit protocol with the window-bounded key state.
     Oracle: the one-shot time_decay_attribution."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_attribution_state,
-        streaming_decay_attribution_maintenance,
+    from etl_pipeline_last_fm_spark.operators.attribution import (
+        decay_attribution_fold_batch,
     )
+    from etl_pipeline_last_fm_spark.streaming.ivm import _two_state_stream_fold
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_decay_attribution_maintenance(
-            stream, state, checkpoint=ck
+        lambda stream, state, ck: fold_stream(
+            stream, state, decay_attribution_fold_batch, ck,
+            protocol=_two_state_stream_fold,
         ),
-        read_attribution_state,
+        lambda spark, root: read_state(spark, f"{root}/c"),
         lambda df: df.select(
             "channel", "n_credited_touches", "credited_cents"
         ),
@@ -457,24 +459,21 @@ def q_twap_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `twap_fold` (streaming/ivm.py): the single-state
-    versioned-commit protocol over the same time-sliced availableNow
-    stream. Oracle: the one-shot time_weighted_avg."""
+    """Streaming twin of `twap_fold`: twap_fold_batch under the
+    single-state guarded_fold protocol (streaming/sketch.py) over the
+    same time-sliced availableNow stream. Oracle: the one-shot
+    time_weighted_avg."""
     from etl_pipeline_last_fm_spark.operators.segments import (
         present_twap_state,
+        twap_fold_batch,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_twap_state,
-        streaming_twap_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_twap_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_twap_state,
+        lambda stream, state, ck: fold_stream(stream, state, twap_fold_batch, ck),
+        read_state,
         present_twap_state,
     )
 

@@ -71,27 +71,24 @@ def q_holt_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `holt_fold` (streaming/ivm.py): the single-state
-    versioned-commit protocol over the shared time-sliced availableNow
-    stream. Oracle: the one-shot holt_linear."""
+    """Streaming twin of `holt_fold`: holt_fold_batch under the
+    single-state guarded_fold protocol (streaming/sketch.py) over the
+    shared time-sliced availableNow stream. Oracle: the one-shot
+    holt_linear."""
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        holt_fold_batch,
         present_holt_state,
     )
     from etl_pipeline_last_fm_spark.registry.round7 import (
         _run_time_sliced_stream,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_holt_state,
-        streaming_holt_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_holt_maintenance(
-            stream, state, checkpoint=ck
-        ),
-        read_holt_state,
+        lambda stream, state, ck: fold_stream(stream, state, holt_fold_batch, ck),
+        read_state,
         present_holt_state,
     )
 
@@ -307,18 +304,17 @@ def _part_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of `skyline_fold` (streaming/ivm.py): the Pareto
-    frontier maintained over a 3-slice availableNow point stream under
-    the versioned-commit replay guard. The fold is commutative (set
-    algebra, no delivery contract) — slice order is immaterial, which
-    no other streaming member can claim. Oracle: the one-shot skyline."""
+    """Streaming twin of `skyline_fold`: the Pareto frontier
+    (skyline_fold_batch) maintained over a 3-slice availableNow point
+    stream under guarded_fold's versioned-commit replay guard. The fold
+    is commutative (set algebra, no delivery contract) — slice order is
+    immaterial, which no other streaming member can claim. Oracle: the
+    one-shot skyline."""
     from etl_pipeline_last_fm_spark.registry.round7 import (
         run_file_sliced_stream,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_skyline_state,
-        streaming_skyline_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.operators.skyline import skyline_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     pts = _part_points(spark, sf_dir)
     slices = [
@@ -328,11 +324,16 @@ def q_streaming_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_file_sliced_stream(
         spark,
         slices,
-        lambda stream, state, ck: streaming_skyline_maintenance(
-            stream, state, "p_partkey", "price_cents", "p_size",
-            bucket_width=_SKYLINE_BUCKET_CENTS, checkpoint=ck,
+        lambda stream, state, ck: fold_stream(
+            stream,
+            state,
+            lambda s, b: skyline_fold_batch(
+                s, b, "p_partkey", "price_cents", "p_size",
+                bucket_width=_SKYLINE_BUCKET_CENTS,
+            ),
+            ck,
         ),
-        read_skyline_state,
+        read_state,
         lambda df: df,
     )
 

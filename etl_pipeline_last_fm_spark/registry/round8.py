@@ -48,19 +48,20 @@ def q_streaming_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_last_fm_spark.registry.round7 import (
         _run_time_sliced_stream,
     )
-    from etl_pipeline_last_fm_spark.streaming.drift import (
-        read_auc,
-        streaming_auc_maintenance,
+    from etl_pipeline_last_fm_spark.operators.evalmetrics import (
+        auc_from_census,
     )
+    from etl_pipeline_last_fm_spark.streaming.drift import auc_census_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     return _run_time_sliced_stream(
         spark,
         sf_dir,
-        lambda stream, state, ck: streaming_auc_maintenance(
-            stream, state, checkpoint=ck
+        lambda stream, state, ck: fold_stream(
+            stream, state, auc_census_fold_batch, ck
         ),
-        read_auc,
-        lambda df: df,
+        read_state,
+        auc_from_census,
     )
 
 

@@ -1,31 +1,21 @@
 """Structured Streaming variants of the ingest path (SURVEY.md §2.11, §7.6)."""
 
-from etl_pipeline_last_fm_spark.streaming.drift import (
-    streaming_checksum_maintenance,
-    streaming_drift_maintenance,
-    streaming_postings_maintenance,
-)
 from etl_pipeline_last_fm_spark.streaming.ingest import (
     stream_raw_to_ods,
     windowed_event_stats,
 )
-from etl_pipeline_last_fm_spark.streaming.ivm import (
-    streaming_attribution_maintenance,
-    streaming_cusum_maintenance,
-    streaming_decay_attribution_maintenance,
-    streaming_ema_maintenance,
-    streaming_join_maintenance,
+from etl_pipeline_last_fm_spark.streaming.ivm import join_fold_batch
+from etl_pipeline_last_fm_spark.streaming.sketch import (
+    fold_stream,
+    guarded_fold,
+    read_state,
 )
 
 __all__ = [
     "stream_raw_to_ods",
     "windowed_event_stats",
-    "streaming_drift_maintenance",
-    "streaming_postings_maintenance",
-    "streaming_checksum_maintenance",
-    "streaming_join_maintenance",
-    "streaming_ema_maintenance",
-    "streaming_cusum_maintenance",
-    "streaming_attribution_maintenance",
-    "streaming_decay_attribution_maintenance",
+    "fold_stream",
+    "guarded_fold",
+    "read_state",
+    "join_fold_batch",
 ]

@@ -1,4 +1,5 @@
-"""Streaming incremental JOIN maintenance (foreachBatch delta-rule fold).
+"""Streaming incremental JOIN maintenance (foreachBatch delta-rule fold)
+and the two-state ordered-fold protocol.
 
 Completes the IVM family: operators/incremental.py maintains aggregates
 (additive states) and batch-mode joins (incremental_join_batches); this
@@ -26,54 +27,45 @@ tag is the standard lowering — it also gives the delta rule its
 atomicity (one batch carries BOTH sides' deltas, so the ΔΔ term is
 well-defined per batch).
 
-Equality contract (tested): after any prefix of batches, read_join_state
-equals the one-shot inner join of all side-a rows seen ⋈ all side-b rows
-seen — for ANY split of either side across batches, including replays.
+Equality contract (tested): after any prefix of batches, the m state
+(``read_state(spark, f"{root}/m")``) equals the one-shot inner join of
+all side-a rows seen ⋈ all side-b rows seen — for ANY split of either
+side across batches, including replays. Drive it with
+``fold_stream(stream, root, on, protocol=join_fold_batch)``.
 
-Scale: at cluster scale the three states are bucketed on the join key so
-every per-batch delta join is exchange-free on the state side; the
-per-batch JOIN cost is O(|Δ| × matched-state) — with the append-layout
-caveat above for the write side.
+Scale: the per-batch JOIN cost is O(|Δ| × matched-state), with the
+append-layout caveat above for the write side; each delta join still
+shuffles the state side, which a key-partitioned state layout would
+remove.
 
 State-retention coupling: the crash-window read of pre-batch versions
 relies on commit_state's default retain=2 keeping v=batch_id-1 alive
 while v=batch_id is being written; the fold asserts the invariant (m
 state present => both pre-batch side states present) and raises instead
 of silently refolding from empty.
+
+The single-state members (ema, cusum, twap, holt, skyline and the
+additive sinks) need no code here: streaming/sketch.py ``guarded_fold``
+runs their ``*_fold_batch`` directly.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_pipeline_last_fm_spark.operators.attribution import _merge_channel_totals
 from etl_pipeline_last_fm_spark.operators.incremental import join_delta
 from etl_pipeline_last_fm_spark.streaming.sketch import (
     BID_COL,
+    _read_state_before,
     _read_state_or_none,
     _strip_bid,
     commit_state,
     last_applied_batch,
-    read_latest_state,
 )
-
-
-def _read_state_before(
-    spark: SparkSession, path: str, batch_id: int
-) -> DataFrame | None:
-    """Latest committed snapshot with version < batch_id — the pre-batch
-    state, stable under replays (see join_fold_batch docstring)."""
-    from etl_pipeline_last_fm_spark.streaming.sketch import (
-        list_state_versions,
-    )
-
-    versions = [(b, p) for b, p in list_state_versions(spark, path)
-                if b < batch_id]
-    if not versions:
-        return None
-    return spark.read.parquet(versions[-1][1])
 
 
 def join_fold_batch(
@@ -151,257 +143,6 @@ def join_fold_batch(
     commit_state(delta.withColumn(BID_COL, bid), m_path, batch_id)
 
 
-def streaming_join_maintenance(
-    tagged_stream: DataFrame,
-    state_root: str,
-    on: Sequence[str],
-    side_col: str = "side",
-    checkpoint: str | None = None,
-):
-    """Maintain the materialized join over a tagged delta stream. Returns
-    a DataStreamWriter — the caller picks the trigger and calls
-    ``.start()``; read with ``read_join_state``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        join_fold_batch(batch_df, batch_id, state_root, on, side_col)
-
-    writer = tagged_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_join_state(spark: SparkSession, state_root: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, f"{state_root}/m"))
-
-
-# --- Streaming EMA: the first ORDER-DEPENDENT IVM member (round 7) -----
-# The additive folds (marts, sketches) and the join maintenance above are
-# all batching-order-insensitive; the EMA recurrence s = (s + v) div 2 is
-# not — batches must arrive as time-ordered slices per key. The batch fold
-# (operators/timeseries.ema_fold_batch) already carries the per-key fold
-# frontier and RAISES on out-of-order delivery (raise_error inside the
-# fold expression, so the violation surfaces at commit time, never as a
-# silently corrupted trajectory); this wrapper adds the versioned-commit
-# replay guard so crash/replay cannot re-fold a batch either.
-
-
-def _single_state_stream_fold(
-    batch_df: DataFrame, batch_id: int, state_path: str, fold_fn
-) -> None:
-    """The single-state ordered-fold protocol, defined ONCE for every
-    order-dependent member maintaining one state: the replay guard is
-    the state's own batch_id, and the pre-batch snapshot is read at the
-    latest version STRICTLY BEFORE batch_id (the join fold's
-    crash-window rule) so a replayed fold sees exactly what the
-    original saw. An empty micro-batch still commits (advancing the
-    guard) and leaves every key's state unchanged — the folds'
-    full-outer joins keep absent-from-batch keys. ``fold_fn(state_or_
-    None, batch_df)`` -> the new state DataFrame.
-
-    Crash windows (both tested in test_streaming_ivm.py): (1) a crash
-    DURING the v=N append leaves a marker-less _v=N dir that
-    list_state_versions ignores — the replay's guard sees v<N as latest,
-    re-folds from the pre-batch snapshot, and overwrite-recommits v=N;
-    (2) a crash AFTER the v=N commit but BEFORE the streaming
-    checkpoint's offset commit replays batch N against a state whose
-    guard already records N — a no-op. There is no window in which a
-    batch can fold twice or a committed snapshot can be lost (at every
-    instant one complete _SUCCESS-marked copy exists, commit_state's
-    invariant)."""
-    spark = batch_df.sparkSession
-    prev = _read_state_or_none(spark, state_path)
-    if int(batch_id) <= last_applied_batch(prev):
-        return  # replayed micro-batch, already folded
-    before = _read_state_before(spark, state_path, int(batch_id))
-    state = _strip_bid(before) if before is not None else None
-    commit_state(
-        fold_fn(state, batch_df).withColumn(BID_COL, F.lit(int(batch_id))),
-        state_path,
-        batch_id,
-    )
-
-
-def ema_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Fold ONE micro-batch of events into the per-key EMA state
-    (key, n_events, ema_cents, max_us, max_tb) under the single-state
-    protocol (_single_state_stream_fold)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: ema_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ),
-    )
-
-
-def streaming_ema_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain the per-key ½-decay EMA over a time-ordered event stream.
-    Returns a DataStreamWriter — the caller picks the trigger and calls
-    ``.start()``; read with ``read_ema_state``. Delivery contract: each
-    micro-batch is a time slice at or after every key's frontier (the
-    Kafka-partition-per-key model); violations raise inside the fold."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        ema_fold_stream_batch(
-            batch_df, batch_id, state_path, key_col, ts_col, value_col,
-            tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_ema_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def twap_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Fold ONE micro-batch into the per-key TWAP state (key, n_events,
-    first_us, num, last_us, last_tb, last_cents) under the single-state
-    protocol — ordered-fold member #5 (operators/segments.py
-    twap_fold_batch)."""
-    from etl_pipeline_last_fm_spark.operators.segments import twap_fold_batch
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: twap_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ),
-    )
-
-
-def streaming_twap_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain the per-key LOCF time-weighted-average state over a
-    time-ordered event stream (same contract as
-    streaming_ema_maintenance; read with ``read_twap_state`` and
-    present with operators/segments.present_twap_state)."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        twap_fold_stream_batch(
-            batch_df, batch_id, state_path, key_col, ts_col, value_col,
-            tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_twap_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def cusum_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """CUSUM sibling of ema_fold_stream_batch — the order-dependent IVM
-    family's second streaming member, same single-state replay-guard
-    protocol (_single_state_stream_fold; the out-of-order raise
-    surfaces at commit time)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        cusum_fold_batch,
-    )
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: cusum_fold_batch(
-            state, batch, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        ),
-    )
-
-
-def streaming_cusum_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    drift_cents: int = 0,
-    threshold_cents: int = 1000,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain per-key CUSUM change-point state over a time-ordered
-    event stream; read with ``read_cusum_state``. Same delivery contract
-    as streaming_ema_maintenance."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cusum_fold_stream_batch(
-            batch_df, batch_id, state_path, drift_cents, threshold_cents,
-            key_col, ts_col, value_col, tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_cusum_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def _merge_channel_totals(prev: DataFrame, delta: DataFrame) -> DataFrame:
-    """Additive merge of per-channel totals: sum every non-channel
-    column — shared by both attribution twins."""
-    cols = [c for c in delta.columns if c != "channel"]
-    return prev.unionByName(delta).groupBy("channel").agg(
-        *[F.sum(c).alias(c) for c in cols]
-    )
-
-
 def _two_state_stream_fold(
     batch_df: DataFrame, batch_id: int, state_root: str, fold_fn
 ) -> None:
@@ -412,7 +153,10 @@ def _two_state_stream_fold(
     the batch, and the replayed fold reads both states at the latest
     version STRICTLY BEFORE this batch_id, so the batch's own credits
     cannot double). ``fold_fn(state_or_None, batch)`` ->
-    (new_key_state, delta_totals)."""
+    (new_key_state, delta_totals): ``attribution_fold_batch`` and
+    ``decay_attribution_fold_batch`` as they are. Drive it with
+    ``fold_stream(..., protocol=_two_state_stream_fold)`` and read the
+    totals with ``read_state(spark, f"{state_root}/c")``."""
     spark = batch_df.sparkSession
     k_path = f"{state_root}/k"
     c_path = f"{state_root}/c"
@@ -435,242 +179,3 @@ def _two_state_stream_fold(
     commit_state(new_state.withColumn(BID_COL, bid), k_path, batch_id)
     # totals LAST: their batch_id is the replay guard for the pair.
     commit_state(delta.withColumn(BID_COL, bid), c_path, batch_id)
-
-
-def attribution_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Last-touch attribution maintenance — order-dependent IVM member
-    #3, riding the two-state protocol (_two_state_stream_fold)."""
-    from etl_pipeline_last_fm_spark.operators.attribution import (
-        attribution_fold_batch,
-    )
-
-    _two_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_root,
-        lambda state, batch: attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        ),
-    )
-
-
-def streaming_attribution_maintenance(
-    event_stream: DataFrame,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain per-channel last-touch attribution totals over a
-    time-ordered event stream; read with ``read_attribution_state``.
-    Same delivery contract as the EMA/CUSUM twins."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        attribution_fold_stream_batch(
-            batch_df, batch_id, state_root, touch_types, conversion_type,
-            window_us, key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_attribution_state(spark: SparkSession, state_root: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, f"{state_root}/c"))
-
-
-def decay_attribution_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Time-decay multi-touch attribution maintenance — order-dependent
-    IVM member #4, same two-state protocol, and the first whose per-key
-    state is WINDOW-BOUNDED (the fold evicts touches older than
-    frontier − window each batch — watermark semantics, so the k state
-    never grows with history)."""
-    from etl_pipeline_last_fm_spark.operators.attribution import (
-        decay_attribution_fold_batch,
-    )
-
-    _two_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_root,
-        lambda state, batch: decay_attribution_fold_batch(
-            state, batch, touch_types, conversion_type, window_us,
-            key_col, type_col, ts_col, value_col, tiebreak_col,
-        ),
-    )
-
-
-def streaming_decay_attribution_maintenance(
-    event_stream: DataFrame,
-    state_root: str,
-    touch_types: tuple[str, ...] = ("view", "click"),
-    conversion_type: str = "purchase",
-    window_us: int = 7 * 86_400_000_000,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain per-channel time-decay attribution totals over a
-    time-ordered event stream; read with ``read_attribution_state``
-    (same totals path as the last-touch twin)."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        decay_attribution_fold_stream_batch(
-            batch_df, batch_id, state_root, touch_types, conversion_type,
-            window_us, key_col, type_col, ts_col, value_col, tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def holt_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-) -> None:
-    """Fold ONE micro-batch into the per-key Holt (level, trend) state
-    (key, n_events, level_cents, trend_cents, max_us, max_tb) under the
-    single-state protocol — ordered-fold member #6
-    (operators/timeseries.py holt_fold_batch)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import holt_fold_batch
-
-    _single_state_stream_fold(
-        batch_df,
-        batch_id,
-        state_path,
-        lambda state, batch: holt_fold_batch(
-            state, batch, key_col, ts_col, value_col, tiebreak_col
-        ),
-    )
-
-
-def streaming_holt_maintenance(
-    event_stream: DataFrame,
-    state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    checkpoint: str | None = None,
-):
-    """Maintain the per-key Holt linear-smoothing state over a
-    time-ordered event stream (same contract as
-    streaming_ema_maintenance; read with ``read_holt_state`` and present
-    with operators/timeseries.present_holt_state)."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        holt_fold_stream_batch(
-            batch_df, batch_id, state_path, key_col, ts_col, value_col,
-            tiebreak_col,
-        )
-
-    writer = event_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_holt_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
-
-
-def skyline_fold_stream_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
-    id_col: str,
-    cost_col: str,
-    gain_col: str,
-    bucket_width: int = 1000,
-) -> None:
-    """Fold ONE micro-batch of points into the maintained Pareto
-    frontier (operators/skyline.py) under the single-state protocol —
-    the IVM family's first FRONTIER-STATE streaming member. The fold is
-    state' = skyline(state ∪ batch), exact by the set-algebraic
-    identity, so it is COMMUTATIVE: micro-batch order is immaterial and
-    there is no delivery contract / out-of-order raise — only the
-    replay guard matters (a replayed batch must not be re-folded, not
-    because re-folding corrupts the frontier — skyline is idempotent on
-    already-folded points — but to keep the protocol uniform)."""
-    from etl_pipeline_last_fm_spark.operators.skyline import skyline_2d
-
-    def fold(state: DataFrame | None, batch: DataFrame) -> DataFrame:
-        pts = batch.select(id_col, cost_col, gain_col)
-        if state is not None:
-            pts = state.unionByName(pts)
-        return skyline_2d(
-            pts, id_col, cost_col, gain_col, bucket_width=bucket_width
-        )
-
-    _single_state_stream_fold(batch_df, batch_id, state_path, fold)
-
-
-def streaming_skyline_maintenance(
-    point_stream: DataFrame,
-    state_path: str,
-    id_col: str,
-    cost_col: str,
-    gain_col: str,
-    bucket_width: int = 1000,
-    checkpoint: str | None = None,
-):
-    """Maintain the Pareto frontier over a stream of points. Returns a
-    DataStreamWriter; read with ``read_skyline_state``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        skyline_fold_stream_batch(
-            batch_df, batch_id, state_path, id_col, cost_col, gain_col,
-            bucket_width,
-        )
-
-    writer = point_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_skyline_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))

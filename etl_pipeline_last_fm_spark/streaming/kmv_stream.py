@@ -10,7 +10,7 @@ HLL's rationale: uniformity of the state format and skipping wasted work,
 not correctness.
 
 State size: |groups| * k rows forever. `kmv_summary` /
-`kmv_set_ops` over `read_kmv_state(...)` turn the maintained state into
+`kmv_set_ops` over `read_state(...)` turn the maintained state into
 distinct counts / quantiles / set-algebra on demand — and because the
 state is a pure function of the value SET (not arrival order), the
 stream-maintained state equals the batch state of the union exactly,
@@ -19,64 +19,19 @@ row for row (tested in tests/test_round4_ops.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from etl_pipeline_last_fm_spark.operators.sketch import kmv_state, merge_kmv_states
-from etl_pipeline_last_fm_spark.streaming.sketch import (
-    BID_COL,
-    _read_state_or_none,
-    _strip_bid,
-    commit_state,
-    last_applied_batch,
-    read_latest_state,
-)
 
 
 def kmv_fold_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
+    state: DataFrame | None,
+    batch: DataFrame,
     value_col: str,
     group_cols: list[str],
     k: int = 64,
     salt: str = "kmv1",
-) -> None:
-    """Fold ONE micro-batch's bottom-k state into the persisted state."""
-    spark = batch_df.sparkSession
-    prev = _read_state_or_none(spark, state_path)
-    if int(batch_id) <= last_applied_batch(prev):
-        return  # replayed micro-batch; merge is idempotent anyway
-    st = kmv_state(batch_df, value_col, group_cols, k=k, salt=salt)
-    if prev is not None:
-        st = merge_kmv_states(_strip_bid(prev), st, group_cols, k=k)
-    st = st.withColumn(BID_COL, F.lit(int(batch_id)))
-    commit_state(st, state_path, batch_id)
-
-
-def streaming_kmv_maintenance(
-    stream: DataFrame,
-    state_path: str,
-    value_col: str,
-    group_cols: list[str],
-    k: int = 64,
-    salt: str = "kmv1",
-    checkpoint: str | None = None,
-):
-    """Maintain per-group bottom-k states over a stream. Returns a
-    DataStreamWriter — the caller picks the trigger and calls .start()."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        kmv_fold_batch(
-            batch_df, batch_id, state_path,
-            value_col=value_col, group_cols=group_cols, k=k, salt=salt,
-        )
-
-    writer = stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_kmv_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
+) -> DataFrame:
+    """Merge one batch's bottom-k state into the state (idempotent)."""
+    new = kmv_state(batch, value_col, group_cols, k=k, salt=salt)
+    return new if state is None else merge_kmv_states(state, new, group_cols, k=k)

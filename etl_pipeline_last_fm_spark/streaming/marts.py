@@ -12,7 +12,7 @@ Two distinct failure modes, two distinct mechanisms:
   the same batch_id) is NOT handled by algebra — folding the same batch
   twice doubles its counts. It is handled by the replay guard: the last
   applied batch_id is persisted inside the state (``__bid`` column, same
-  parquet commit as the data) and ``fold`` no-ops when
+  parquet commit as the data) and ``guarded_fold`` no-ops when
   batch_id <= last applied. See streaming/sketch.py.
 
 With both, the presented mart equals the batch rebuild of everything seen
@@ -24,64 +24,22 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from etl_pipeline_last_fm_spark.operators.incremental import (
     additive_state,
     merge_states,
 )
-from etl_pipeline_last_fm_spark.streaming.sketch import (
-    BID_COL,
-    _read_state_or_none,
-    _strip_bid,
-    commit_state,
-    last_applied_batch,
-    read_latest_state,
-)
 
 
 def mart_fold_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
+    state: DataFrame | None,
+    batch: DataFrame,
     keys: Sequence[str],
     value_col: str,
-) -> None:
-    """Fold ONE micro-batch's additive state into the persisted mart state.
-    Module-level so the at-least-once replay guard is directly testable."""
-    spark = batch_df.sparkSession
-    prev = _read_state_or_none(spark, state_path)
-    if int(batch_id) <= last_applied_batch(prev):
-        return  # replayed micro-batch, already folded
-    state = additive_state(batch_df, list(keys), value_col)
-    if prev is not None:
-        state = merge_states([_strip_bid(prev), state], list(keys))
-    state = state.withColumn(BID_COL, F.lit(int(batch_id)))
-    commit_state(state, state_path, batch_id)
-
-
-def streaming_mart_maintenance(
-    stream: DataFrame,
-    state_path: str,
-    keys: Sequence[str],
-    value_col: str,
-    checkpoint: str | None = None,
-):
-    """Fold each micro-batch's additive state into the parquet mart state
-    (replay-guarded, see mart_fold_batch). Read the mart with
-    operators.incremental.present(read_state(...)). Returns a
-    DataStreamWriter — the caller picks the trigger and calls
-    ``.start()``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        mart_fold_batch(batch_df, batch_id, state_path, keys, value_col)
-
-    writer = stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
+) -> DataFrame:
+    """Merge one batch's additive (sum, count) state into the mart state.
+    Run it per micro-batch with streaming/sketch.py ``fold_stream`` /
+    ``guarded_fold``; present with operators.incremental.present."""
+    new = additive_state(batch, list(keys), value_col)
+    return new if state is None else merge_states([state, new], list(keys))

@@ -1,4 +1,12 @@
-"""Incremental sketch maintenance on a stream (foreachBatch merge).
+"""Stream fold drivers (foreachBatch merge) and the sketch folds.
+
+Every streaming fold in the package runs through this module:
+``fold_stream`` wires a stream to ``guarded_fold`` (one micro-batch:
+replay guard -> ``fold_fn(state, batch)`` -> versioned commit), and
+``read_state`` reads the result back. A member only supplies its
+``fold_fn``: the ordered folds (operators/timeseries.py, segments.py,
+skyline.py) and the additive sinks (marts, sketches, censuses), whose
+fold is ``merge(state, make(batch))``.
 
 The sketch states in operators/sketch.py are mergeable DataFrames:
 - HLL registers merge by MAX per (group, bucket);
@@ -11,7 +19,7 @@ size fixed at |groups|·m registers (HLL) / d·w cells (CMS) forever.
 Replay safety: foreachBatch is AT-LEAST-ONCE — after a failure Structured
 Streaming re-runs the last micro-batch with the SAME batch_id. HLL's max
 merge is naturally idempotent, but a CMS sum (or a mart count) folded twice
-silently inflates. Every fold here therefore persists the last applied
+silently inflates. ``guarded_fold`` therefore persists the last applied
 batch_id inside the state itself (constant ``__bid`` column, written in the
 SAME parquet commit as the data so marker and state cannot diverge) and
 no-ops when a replayed batch_id <= last applied. This relies on Structured
@@ -38,7 +46,7 @@ from etl_pipeline_last_fm_spark.operators.sketch import cms_counters
 
 #: Constant column carrying the last applied micro-batch id in every
 #: persisted state row. Written atomically with the data (one parquet
-#: commit), read back by the replay guard; stripped by the read_* helpers.
+#: commit), read back by the replay guard; stripped by ``read_state``.
 BID_COL = "__bid"
 
 
@@ -123,16 +131,19 @@ def _read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(versions[-1][1])
 
 
-def read_latest_state(spark: SparkSession, path: str) -> DataFrame:
-    """Latest committed snapshot; raises if no commit has landed yet."""
+def _strip_bid(df: DataFrame) -> DataFrame:
+    return df.drop(BID_COL) if BID_COL in df.columns else df
+
+
+def read_state(spark: SparkSession, path: str) -> DataFrame:
+    """The latest committed state under ``path`` without its replay
+    marker — the one reader of every fold's state (present it with the
+    member's own ``present_*`` / ``*_from_census`` function). Raises if
+    no commit has landed yet."""
     prev = _read_state_or_none(spark, path)
     if prev is None:
         raise FileNotFoundError(f"no committed state snapshot under {path}")
-    return prev
-
-
-def _strip_bid(df: DataFrame) -> DataFrame:
-    return df.drop(BID_COL) if BID_COL in df.columns else df
+    return _strip_bid(prev)
 
 
 def last_applied_batch(prev: DataFrame | None) -> int:
@@ -141,6 +152,80 @@ def last_applied_batch(prev: DataFrame | None) -> int:
         return -1
     row = prev.agg(F.max(BID_COL).alias("b")).first()
     return -1 if row is None or row["b"] is None else int(row["b"])
+
+
+def _read_state_before(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """Latest committed snapshot with version < batch_id — the pre-batch
+    state, stable under replays (see guarded_fold)."""
+    versions = [(b, p) for b, p in list_state_versions(spark, path)
+                if b < batch_id]
+    if not versions:
+        return None
+    return spark.read.parquet(versions[-1][1])
+
+
+def guarded_fold(
+    batch_df: DataFrame, batch_id: int, state_path: str, fold_fn
+) -> None:
+    """Fold ONE micro-batch into the state at ``state_path`` — the
+    single-state protocol, defined once for every member:
+    ``fold_fn(state_or_None, batch_df)`` -> the new state DataFrame
+    (the ordered folds pass ``ema_fold_batch`` & co. directly; the
+    additive sinks return ``merge(state, make(batch))``). The replay
+    guard is the state's own batch_id, and the pre-batch snapshot is
+    read at the latest version STRICTLY BEFORE batch_id (the join fold's
+    crash-window rule) so a replayed fold sees exactly what the original
+    saw. An empty micro-batch still commits (advancing the guard) and
+    leaves every key's state unchanged.
+
+    Crash windows (tested in test_streaming_ivm.py for every member):
+    (1) a crash DURING the v=N append leaves a marker-less _v=N dir that
+    list_state_versions ignores — the replay's guard sees v<N as latest,
+    re-folds from the pre-batch snapshot, and overwrite-recommits v=N;
+    (2) a crash AFTER the v=N commit but BEFORE the streaming
+    checkpoint's offset commit replays batch N against a state whose
+    guard already records N — a no-op. There is no window in which a
+    batch can fold twice or a committed snapshot can be lost (at every
+    instant one complete _SUCCESS-marked copy exists, commit_state's
+    invariant)."""
+    spark = batch_df.sparkSession
+    prev = _read_state_or_none(spark, state_path)
+    if int(batch_id) <= last_applied_batch(prev):
+        return  # replayed micro-batch, already folded
+    before = _read_state_before(spark, state_path, int(batch_id))
+    state = _strip_bid(before) if before is not None else None
+    commit_state(
+        fold_fn(state, batch_df).withColumn(BID_COL, F.lit(int(batch_id))),
+        state_path,
+        batch_id,
+    )
+
+
+def fold_stream(
+    stream: DataFrame,
+    state_path: str,
+    fold_fn,
+    checkpoint: str | None = None,
+    protocol=guarded_fold,
+):
+    """Maintain a folded state over a stream: every micro-batch runs
+    ``protocol(batch_df, batch_id, state_path, fold_fn)``. Returns a
+    DataStreamWriter — the caller picks the trigger and calls
+    ``.start()``; read the state with ``read_state``. The protocol is
+    ``guarded_fold`` for every single-state member; the multi-state ones
+    plug in the same way (streaming/ivm.py ``_two_state_stream_fold``,
+    whose fold_fn returns (key state, totals delta), and
+    ``join_fold_batch``, whose fourth argument is the join keys)."""
+    writer = stream.writeStream.foreachBatch(
+        lambda batch_df, batch_id: protocol(
+            batch_df, batch_id, state_path, fold_fn
+        )
+    )
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer
 
 
 def merge_cms_grids(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -153,57 +238,18 @@ def merge_cms_grids(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def cms_fold_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
+    state: DataFrame | None,
+    batch: DataFrame,
     token_col: str = "tok",
     depth: int = 4,
     width: int = 1024,
     salt: str = "cms1",
-) -> None:
-    """Fold ONE micro-batch's CMS grid into the persisted state. Module-level
-    (not a closure) so the at-least-once replay guard is directly testable:
-    calling this twice with the same batch_id must be a no-op the second
-    time — CMS sums are not idempotent, unlike HLL maxima."""
-    spark = batch_df.sparkSession
-    prev = _read_state_or_none(spark, state_path)
-    if int(batch_id) <= last_applied_batch(prev):
-        return  # replayed micro-batch, already folded
-    grid = cms_counters(batch_df, token_col, depth=depth, width=width, salt=salt)
-    if prev is not None:
-        grid = merge_cms_grids(_strip_bid(prev), grid)
-    grid = grid.withColumn(BID_COL, F.lit(int(batch_id)))
-    commit_state(grid, state_path, batch_id)
-
-
-def streaming_cms_maintenance(
-    events_stream: DataFrame,
-    state_path: str,
-    token_col: str = "tok",
-    depth: int = 4,
-    width: int = 1024,
-    checkpoint: str | None = None,
-    salt: str = "cms1",
-):
-    """Maintain a CMS grid over a token stream: each micro-batch's grid is
-    summed into the parquet state at ``state_path`` (replay-guarded, see
-    cms_fold_batch). Returns a DataStreamWriter — the caller picks the
-    trigger and calls ``.start()``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cms_fold_batch(
-            batch_df, batch_id, state_path,
-            token_col=token_col, depth=depth, width=width, salt=salt,
-        )
-
-    writer = events_stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_cms_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
+) -> DataFrame:
+    """Sum one batch's CMS grid into the state. Under ``guarded_fold``
+    the replay guard matters here: CMS sums are not idempotent, unlike
+    HLL maxima."""
+    grid = cms_counters(batch, token_col, depth=depth, width=width, salt=salt)
+    return grid if state is None else merge_cms_grids(state, grid)
 
 
 def merge_hll_registers(a: DataFrame, b: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -219,30 +265,27 @@ def merge_hll_registers(a: DataFrame, b: DataFrame, group_cols: list[str]) -> Da
 
 
 def hll_fold_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    state_path: str,
+    state: DataFrame | None,
+    batch: DataFrame,
     value_col: str,
     group_cols: list[str],
     b: int = 6,
     salt: str = "hll1",
-) -> None:
-    """Fold ONE micro-batch's HLL registers into the persisted state
-    (replay-guarded; see cms_fold_batch for why)."""
+) -> DataFrame:
+    """Max one batch's per-group HLL registers into the state. The state
+    is the full sketch — |groups| * 2^b rows forever — and
+    ``hll_estimate_from_registers`` over ``read_state(...)`` turns it
+    into counts on demand."""
     from etl_pipeline_last_fm_spark.functions.scalar import portable_hash60
     from etl_pipeline_last_fm_spark.operators.sketch import _hll_rank
 
     m = 1 << b
     width = 60 - b
-    spark = batch_df.sparkSession
-    prev = _read_state_or_none(spark, state_path)
-    if int(batch_id) <= last_applied_batch(prev):
-        return
     h = portable_hash60(
         F.concat(F.lit(salt), F.lit(":"), F.col(value_col).cast("string"))
     )
     regs = (
-        batch_df.select(
+        batch.select(
             *group_cols,
             h.bitwiseAND(F.lit(m - 1)).alias("__bkt"),
             _hll_rank(F.shiftright(h, b), width).alias("__mj"),
@@ -250,39 +293,4 @@ def hll_fold_batch(
         .groupBy(*group_cols, "__bkt")
         .agg(F.max("__mj").alias("__mj"))
     )
-    if prev is not None:
-        regs = merge_hll_registers(_strip_bid(prev), regs, group_cols)
-    regs = regs.withColumn(BID_COL, F.lit(int(batch_id)))
-    commit_state(regs, state_path, batch_id)
-
-
-def streaming_hll_maintenance(
-    stream: DataFrame,
-    state_path: str,
-    value_col: str,
-    group_cols: list[str],
-    b: int = 6,
-    salt: str = "hll1",
-    checkpoint: str | None = None,
-):
-    """Maintain per-group HLL registers over a stream: each micro-batch's
-    registers fold into the parquet state by register-wise max. The state
-    is the full sketch — |groups| * 2^b rows forever — and
-    ``hll_estimate_from_registers`` over ``read_hll_state(...)`` turns it
-    into counts on demand. Returns a DataStreamWriter — the caller picks
-    the trigger and calls ``.start()``."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        hll_fold_batch(
-            batch_df, batch_id, state_path,
-            value_col=value_col, group_cols=group_cols, b=b, salt=salt,
-        )
-
-    writer = stream.writeStream.foreachBatch(fold)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
-
-
-def read_hll_state(spark: SparkSession, state_path: str) -> DataFrame:
-    return _strip_bid(read_latest_state(spark, state_path))
+    return regs if state is None else merge_hll_registers(state, regs, group_cols)

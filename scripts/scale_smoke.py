@@ -679,10 +679,8 @@ def round7_wave(spark, ev_typed, n_events: int) -> None:
     ).count()
     t_lpc = time.perf_counter() - t0
 
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import guarded_fold, read_state
 
     base = 1_700_000_000_000_000
     c1 = base + (n_events * 47_000_000) // 3
@@ -696,8 +694,8 @@ def round7_wave(spark, ev_typed, n_events: int) -> None:
     with tempfile.TemporaryDirectory(prefix="sgraft_smoke_ema_") as tmp:
         t0 = time.perf_counter()
         for i, b in enumerate(batches):
-            ema_fold_stream_batch(b, i, f"{tmp}/state")
-        n_se = read_ema_state(spark, f"{tmp}/state").count()
+            guarded_fold(b, i, f"{tmp}/state", ema_fold_batch)
+        n_se = read_state(spark, f"{tmp}/state").count()
         t_se = time.perf_counter() - t0
 
     from etl_pipeline_last_fm_spark.operators.attribution import (

@@ -77,320 +77,3 @@ def test_bucketed_join_values_match_plain_join(spark, sf_dir, bucketed_tables):
     assert sorted(map(tuple, bucketed.collect())) == sorted(
         map(tuple, plain.collect())
     )
-
-
-def test_bucketed_ivm_state_join_has_no_state_side_exchange(spark, sf_dir):
-    """VERDICT r5 item 4: the IVM family's scale claim — side states
-    bucketed on the join key make every per-batch delta join exchange-free
-    on the STATE side — proven the same way the plain bucketed join was.
-    The maintained M must also equal the one-shot join (the maintenance
-    identity, now over catalog-table states)."""
-    from etl_pipeline_last_fm_spark.operators.incremental import (
-        incremental_join_batches_bucketed,
-    )
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"), F.col("o_orderdate").alias("a_date")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k"),
-        F.col("l_linenumber").alias("ln"),
-        F.col("l_extendedprice").alias("b_price"),
-    )
-    a_batches = [orders.filter(F.col("k") % 3 == i) for i in range(3)]
-    b_batches = [
-        li.filter(F.col("ln") % 3 == i).drop("ln") for i in range(3)
-    ]
-    try:
-        m = incremental_join_batches_bucketed(
-            spark, a_batches, b_batches, ["k"], "ivm_state", n_buckets=4
-        )
-        # Maintenance identity over bucketed states.
-        expect = sorted(
-            map(tuple, orders.join(li.drop("ln"), "k").collect())
-        )
-        assert sorted(map(tuple, m.collect())) == expect
-
-        # The load-bearing plan assert: a NEXT round's one-sided delta
-        # term (new delta x accumulated state) — the state side (a
-        # 3-round, 12-file bucketed table) is consumed through its
-        # bucket-derived partitioning with NO Exchange above its scan;
-        # only the delta shuffles (merge hint: broadcast would mask the
-        # property, exactly as in the plain bucketed-join test).
-        delta = li.filter(F.col("ln") % 7 == 0).drop("ln")
-        term = spark.table("ivm_state_a").hint("merge").join(delta, "k")
-        plan = _plan(term)
-        assert "SortMergeJoin" in plan, plan
-        assert plan.count("Exchange") == 2, plan  # one node: tree + detail
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ivm_state_a")
-        spark.sql("DROP TABLE IF EXISTS ivm_state_b")
-
-
-def test_bucketed_ema_state_fold_has_no_state_side_exchange(spark, sf_dir):
-    """The ordered-fold tier's scale claim (round 7): the carried EMA
-    state kept as a catalog table bucketed on the key makes the
-    per-batch full-outer state⋈batch join exchange-free on the STATE
-    side — the one Exchange in the fold term belongs to the batch's
-    per-key aggregate. The folded result must also equal the one-shot
-    ema_halflife (the maintenance identity, now over catalog state)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        ema_fold_batch,
-        ema_halflife,
-        incremental_ema_batches_bucketed,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    cuts = ["2024-01-11", "2024-01-21"]
-    batches = [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter(F.col("ts") >= cuts[1]),
-    ]
-    try:
-        # Bucket count == shuffle partitions: the batch aggregate's own
-        # Exchange then lands ALREADY in the bucket layout, so the fold
-        # join adds no re-shuffle on either side (with a mismatched
-        # count, EnsureRequirements inserts a second batch-side Exchange
-        # to re-partition 8 -> n_buckets — still state-side-free, but
-        # the deployment guidance is: pick bucket count = the workload's
-        # shuffle parallelism).
-        got = incremental_ema_batches_bucketed(
-            spark, batches, "ema_state", n_buckets=8
-        )
-        want = ema_halflife(ev)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-
-        # The load-bearing plan assert: a NEXT round's fold against the
-        # bucketed state — the state side (3 rounds of overwrites, last
-        # one wins) is consumed through its bucket-derived partitioning
-        # with NO Exchange above its scan; the single Exchange in the
-        # term is the batch aggregate's.
-        term = ema_fold_batch(spark.table("ema_state"), batches[2])
-        plan = _plan(term)
-        assert "SortMergeJoin FullOuter" in plan, plan
-        assert plan.count("Exchange") == 2, plan  # one node: tree + detail
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ema_state")
-
-
-def test_versioned_ema_state_appends_and_reads_exchange_free(spark, sf_dir):
-    """The append-only versioned state layout (round 7): writes are
-    O(batch keys) — each round appends only batch-present keys, stamped
-    __v — and the latest-row-per-key read aggregates WITHOUT any
-    Exchange on the bucketed key. The maintenance identity must still
-    hold over this layout."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        ema_halflife,
-        incremental_ema_batches_versioned,
-        read_versioned_state,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    cuts = ["2024-01-11", "2024-01-21"]
-    batches = [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter(F.col("ts") >= cuts[1]),
-    ]
-    try:
-        got = incremental_ema_batches_versioned(
-            spark, batches, "ema_vstate", n_buckets=8
-        )
-        want = ema_halflife(ev)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        # O(batch keys) write: the table holds one row per (round, key
-        # present in that round's batch) — strictly fewer than rounds ×
-        # total keys when any key skips a batch, and exactly the sum of
-        # per-batch key counts.
-        n_rows = spark.table("ema_vstate").count()
-        per_batch_keys = sum(
-            b.select("user_id").distinct().count() for b in batches
-        )
-        assert n_rows == per_batch_keys
-        # The load-bearing plan assert: the latest-per-key read carries
-        # ZERO Exchange — the bucketed scan already satisfies the
-        # group-by distribution.
-        plan = _plan(read_versioned_state(spark, "ema_vstate"))
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ema_vstate")
-
-
-def _time_slices(ev):
-    cuts = ["2024-01-11", "2024-01-21"]
-    return [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter(F.col("ts") >= cuts[1]),
-    ]
-
-
-def test_bucketed_cusum_state_fold_has_no_state_side_exchange(spark, sf_dir):
-    """The generic layout driver (fold_batches_bucketed) carries the
-    CUSUM member with the SAME state-side-exchange-free plan as the EMA
-    member — the property belongs to the shared frontier_ordered_join
-    scaffold, and this test proves it transfers: maintenance identity
-    vs the one-shot cusum_alarms, plus the plan assert on a next-round
-    fold term against the bucketed state."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        cusum_alarms,
-        cusum_fold_batch,
-        incremental_cusum_batches_bucketed,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    batches = _time_slices(ev)
-    try:
-        got = incremental_cusum_batches_bucketed(
-            spark, batches, "cusum_state", n_buckets=8
-        )
-        want = cusum_alarms(ev)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        term = cusum_fold_batch(spark.table("cusum_state"), batches[2])
-        plan = _plan(term)
-        assert "SortMergeJoin FullOuter" in plan, plan
-        assert plan.count("Exchange") == 2, plan  # one node: tree + detail
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cusum_state")
-
-
-def test_versioned_cusum_state_appends_and_reads_exchange_free(spark, sf_dir):
-    """The generic versioned driver (fold_batches_versioned) carries the
-    CUSUM member: O(batch-keys) appends, exchange-free latest-per-key
-    read, maintenance identity intact."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        cusum_alarms,
-        incremental_cusum_batches_versioned,
-        read_versioned_state,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    batches = _time_slices(ev)
-    try:
-        got = incremental_cusum_batches_versioned(
-            spark, batches, "cusum_vstate", n_buckets=8
-        )
-        want = cusum_alarms(ev)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        n_rows = spark.table("cusum_vstate").count()
-        per_batch_keys = sum(
-            b.select("user_id").distinct().count() for b in batches
-        )
-        assert n_rows == per_batch_keys
-        plan = _plan(read_versioned_state(spark, "cusum_vstate"))
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cusum_vstate")
-
-
-def test_bucketed_attribution_state_fold_matches_one_shot(spark, sf_dir):
-    """The attribution member (two-part result: bucketed KEY state +
-    additive channel totals) over the bucketed layout: summed deltas
-    must equal the one-shot last_touch_attribution, and a next-round
-    fold term consumes the state side exchange-free."""
-    from etl_pipeline_last_fm_spark.operators.attribution import (
-        incremental_attribution_batches_bucketed,
-        last_touch_attribution,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    batches = _time_slices(ev)
-    try:
-        got = incremental_attribution_batches_bucketed(
-            spark, batches, "attr_state", n_buckets=8
-        )
-        want = last_touch_attribution(ev)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        # attribution_fold_batch materializes the fold (localCheckpoint)
-        # before the state/delta split, so assert on the UNCHECKPOINTED
-        # fold term instead: rebuild the join the way the fold does.
-        from etl_pipeline_last_fm_spark.operators.attribution import (
-            _attr_batch_state,
-        )
-        from etl_pipeline_last_fm_spark.operators.timeseries import (
-            frontier_ordered_join,
-        )
-
-        s = spark.table("attr_state").select(
-            "key",
-            F.col("last_us").alias("__slu"),
-            F.col("last_t").alias("__slt"),
-            F.col("max_us").alias("__su"),
-            F.col("max_tb").alias("__st"),
-        )
-        b = _attr_batch_state(
-            batches[2], ("view", "click"), "purchase",
-            "user_id", "event_type", "ts", "value", "event_id",
-        )
-        j, _ = frontier_ordered_join(s, b)
-        plan = _plan(j)
-        assert "SortMergeJoin FullOuter" in plan, plan
-        assert plan.count("Exchange") == 2, plan  # batch agg only
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS attr_state")
-
-
-def test_bucketed_and_versioned_twap_state_folds(spark, sf_dir):
-    """Ordered-fold member #5 (TWAP) takes BOTH generic layouts: the
-    maintenance identity against the one-shot time_weighted_avg holds
-    through the bucketed overwrite table AND the versioned append-only
-    table (decimal(38,0) integral surviving the parquet rounds), the
-    next-round fold term consumes the bucketed state exchange-free, and
-    the versioned table's row count is O(batch keys)."""
-    from etl_pipeline_last_fm_spark.operators.segments import (
-        incremental_twap_batches_bucketed,
-        incremental_twap_batches_versioned,
-        time_weighted_avg,
-        twap_fold_batch,
-    )
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        read_versioned_state,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    batches = _time_slices(ev)
-    want = sorted(map(tuple, time_weighted_avg(ev).collect()))
-    try:
-        got = incremental_twap_batches_bucketed(
-            spark, batches, "twap_state", n_buckets=8
-        )
-        assert sorted(map(tuple, got.collect())) == want
-        term = twap_fold_batch(spark.table("twap_state"), batches[2])
-        plan = _plan(term)
-        assert "SortMergeJoin FullOuter" in plan, plan
-        assert plan.count("Exchange") == 2, plan  # batch agg only
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS twap_state")
-    try:
-        got = incremental_twap_batches_versioned(
-            spark, batches, "twap_vstate", n_buckets=8
-        )
-        assert sorted(map(tuple, got.collect())) == want
-        n_rows = spark.table("twap_vstate").count()
-        per_batch_keys = sum(
-            b.select("user_id").distinct().count() for b in batches
-        )
-        assert n_rows == per_batch_keys
-        plan = _plan(read_versioned_state(spark, "twap_vstate"))
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS twap_vstate")

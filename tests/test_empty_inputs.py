@@ -4,6 +4,7 @@ rows is a fact of life, not an error."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.expectations import (
@@ -144,3 +145,44 @@ def test_kcore_on_empty(spark):
 
     edges = spark.createDataFrame([], "a long, b long")
     assert kcore_rounds(edges, k=2, n_rounds=3).count() == 0
+
+
+def _batch_fold_members():
+    from etl_pipeline_last_fm_spark.operators.attribution import (
+        incremental_attribution_batches,
+        incremental_decay_attribution_batches,
+    )
+    from etl_pipeline_last_fm_spark.operators.incremental import fold_batches
+    from etl_pipeline_last_fm_spark.operators.segments import (
+        incremental_twap_batches,
+    )
+    from etl_pipeline_last_fm_spark.operators.skyline import skyline_fold_batches
+    from etl_pipeline_last_fm_spark.operators.timeseries import (
+        incremental_cusum_batches,
+        incremental_ema_batches,
+        incremental_holt_batches,
+    )
+
+    return {
+        "fold_batches": lambda b: fold_batches(b, lambda s, x: x),
+        "ema": incremental_ema_batches,
+        "cusum": incremental_cusum_batches,
+        "holt": incremental_holt_batches,
+        "twap": incremental_twap_batches,
+        "attribution": incremental_attribution_batches,
+        "decay_attribution": incremental_decay_attribution_batches,
+        "skyline": lambda b: skyline_fold_batches(b, "id", "cost", "gain"),
+    }
+
+
+@pytest.mark.parametrize(
+    "member",
+    ["fold_batches", "ema", "cusum", "holt", "twap", "attribution",
+     "decay_attribution", "skyline"],
+)
+def test_batch_fold_of_no_batches_raises_value_error(member):
+    """An empty batch list has no state to return: every batch fold driver
+    fails with a ValueError up front (not an assert that ``python -O``
+    strips, and not a crash on ``None`` further down)."""
+    with pytest.raises(ValueError, match="at least one batch"):
+        _batch_fold_members()[member]([])

@@ -120,10 +120,8 @@ def test_streaming_mart_equals_batch_rebuild(spark, sf_dir, tmp_path):
         present,
     )
     from etl_pipeline_last_fm_spark.sources.tables import load_table
-    from etl_pipeline_last_fm_spark.streaming.marts import (
-        read_state,
-        streaming_mart_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.marts import mart_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import fold_stream, read_state
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     src = str(tmp_path / "ev_files")
@@ -136,8 +134,12 @@ def test_streaming_mart_equals_batch_rebuild(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_mart_maintenance(
-            stream, state, keys=["event_type"], value_col="value",
+        fold_stream(
+            stream,
+            state,
+            lambda s, b: mart_fold_batch(
+                s, b, keys=["event_type"], value_col="value"
+            ),
             checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)

@@ -185,40 +185,48 @@ def _state_set(df):
 
 
 def test_kmv_stream_fold_equals_batch(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.streaming.kmv_stream import (
-        kmv_fold_batch,
-        read_kmv_state,
+    from etl_pipeline_last_fm_spark.streaming.kmv_stream import kmv_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import (
+        guarded_fold,
+        read_state,
     )
+
+    def fold(st, b):
+        return kmv_fold_batch(st, b, "v", [], k=64, salt="s")
 
     state = str(tmp_path / "kmv_state")
     b0 = spark.createDataFrame([(v,) for v in range(0, 300)], "v long")
     b1 = spark.createDataFrame([(v,) for v in range(200, 600)], "v long")
-    kmv_fold_batch(b0, 0, state, "v", [], k=64, salt="s")
-    kmv_fold_batch(b1, 1, state, "v", [], k=64, salt="s")
+    guarded_fold(b0, 0, state, fold)
+    guarded_fold(b1, 1, state, fold)
     # stream-maintained state == batch state of the union, row for row:
     # bottom-k is a pure function of the value SET, not arrival order
     union = b0.unionByName(b1)
     want = _state_set(kmv_state(union, "v", [], k=64, salt="s"))
-    assert _state_set(read_kmv_state(spark, state)) == want
+    assert _state_set(read_state(spark, state)) == want
 
 
 def test_kmv_stream_fold_replay_idempotent(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.streaming.kmv_stream import (
-        kmv_fold_batch,
-        read_kmv_state,
+    from etl_pipeline_last_fm_spark.streaming.kmv_stream import kmv_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import (
+        guarded_fold,
+        read_state,
     )
+
+    def fold(st, b):
+        return kmv_fold_batch(st, b, "v", [], k=64, salt="s")
 
     state = str(tmp_path / "kmv_state")
     b0 = spark.createDataFrame([(v,) for v in range(100)], "v long")
-    kmv_fold_batch(b0, 0, state, "v", [], k=64, salt="s")
-    once = _state_set(read_kmv_state(spark, state))
+    guarded_fold(b0, 0, state, fold)
+    once = _state_set(read_state(spark, state))
     # replay with the SAME batch_id: guarded no-op
-    kmv_fold_batch(b0, 0, state, "v", [], k=64, salt="s")
-    assert _state_set(read_kmv_state(spark, state)) == once
+    guarded_fold(b0, 0, state, fold)
+    assert _state_set(read_state(spark, state)) == once
     # and even WITHOUT the guard the merge is idempotent: folding the same
     # rows under a NEW batch_id also cannot change the state
-    kmv_fold_batch(b0, 1, state, "v", [], k=64, salt="s")
-    assert _state_set(read_kmv_state(spark, state)) == once
+    guarded_fold(b0, 1, state, fold)
+    assert _state_set(read_state(spark, state)) == once
 
 
 def test_bloom_same_key_name_join(spark):

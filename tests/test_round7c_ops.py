@@ -156,64 +156,31 @@ def test_holt_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     idempotent); an out-of-order batch raises WITHOUT committing, and a
     corrected batch then lands on the pre-violation state."""
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        holt_fold_batch,
         present_holt_state,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        holt_fold_stream_batch,
-        read_holt_state,
+    from etl_pipeline_last_fm_spark.streaming.sketch import (
+        guarded_fold,
+        read_state,
     )
 
     path = str(tmp_path / "holt")
     slices = _holt_slices(spark)
-    holt_fold_stream_batch(slices[0], 0, path)
-    holt_fold_stream_batch(slices[0], 0, path)  # replay
+    guarded_fold(slices[0], 0, path, holt_fold_batch)
+    guarded_fold(slices[0], 0, path, holt_fold_batch)  # replay
     stale = _ev(spark, [(1, 9, 1, 99.0)])
     with pytest.raises(Exception, match="out-of-order"):
-        holt_fold_stream_batch(stale, 1, path)
-    holt_fold_stream_batch(slices[1], 1, path)  # corrected batch, same bid
-    holt_fold_stream_batch(slices[1].limit(0), 2, path)  # empty advances
-    holt_fold_stream_batch(slices[2], 3, path)
-    holt_fold_stream_batch(slices[2], 3, path)  # replay
+        guarded_fold(stale, 1, path, holt_fold_batch)
+    # corrected batch, same bid
+    guarded_fold(slices[1], 1, path, holt_fold_batch)
+    # empty advances
+    guarded_fold(slices[1].limit(0), 2, path, holt_fold_batch)
+    guarded_fold(slices[2], 3, path, holt_fold_batch)
+    guarded_fold(slices[2], 3, path, holt_fold_batch)  # replay
     got = sorted(
-        map(tuple, present_holt_state(read_holt_state(spark, path)).collect())
+        map(tuple, present_holt_state(read_state(spark, path)).collect())
     )
     assert got == _want_holt(spark, slices)
-
-
-def test_holt_fold_bucketed_and_versioned_layouts(spark, tmp_path):
-    """The generic state layouts carry the Holt member too: identity vs
-    the one-shot through both fold_batches_bucketed (overwrite) and
-    fold_batches_versioned (append-only, latest-per-key read)."""
-    from etl_pipeline_last_fm_spark.operators.timeseries import (
-        fold_batches_bucketed,
-        fold_batches_versioned,
-        holt_fold_batch,
-        present_holt_state,
-    )
-
-    import shutil
-
-    for t in ("holt_state_b", "holt_state_v"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # a warehouse dir left by a DIFFERENT session survives the DROP
-        # (no catalog entry) and fails saveAsTable — remove it too
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    slices = _holt_slices(spark)
-    want = _want_holt(spark, slices)
-    got_b = sorted(map(tuple, present_holt_state(
-        fold_batches_bucketed(
-            spark, slices, "holt_state_b", holt_fold_batch, n_buckets=4
-        )
-    ).collect()))
-    assert got_b == want
-    got_v = sorted(map(tuple, present_holt_state(
-        fold_batches_versioned(
-            spark, slices, "holt_state_v", holt_fold_batch, "user_id",
-            n_buckets=4,
-        )
-    ).collect()))
-    assert got_v == want
 
 
 def _py_dw(rows):
@@ -580,11 +547,17 @@ def test_skyline_stream_fold_identity_replay_and_commutativity(
     frontier == the one-shot skyline; replays no-op; and — unique to
     this member — ANY batch order yields the same frontier (the fold is
     commutative set algebra, no delivery contract)."""
-    from etl_pipeline_last_fm_spark.operators.skyline import skyline_2d
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_skyline_state,
-        skyline_fold_stream_batch,
+    from etl_pipeline_last_fm_spark.operators.skyline import (
+        skyline_2d,
+        skyline_fold_batch,
     )
+    from etl_pipeline_last_fm_spark.streaming.sketch import (
+        guarded_fold,
+        read_state,
+    )
+
+    def fold(state, batch):
+        return skyline_fold_batch(state, batch, "id", "cost", "gain", 7)
 
     pts = [(i, (i * 37) % 50, (i * 23) % 40) for i in range(60)]
     df = spark.createDataFrame(pts, "id long, cost long, gain long")
@@ -597,15 +570,11 @@ def test_skyline_stream_fold_identity_replay_and_commutativity(
     for order, sub in (((0, 1, 2), "fwd"), ((2, 0, 1), "scrambled")):
         path = str(tmp_path / f"sky_{sub}")
         for bid, s in enumerate(order):
-            skyline_fold_stream_batch(
-                slices[s], bid, path, "id", "cost", "gain", 7
-            )
+            guarded_fold(slices[s], bid, path, fold)
             if bid == 1:  # replay mid-sequence must no-op
-                skyline_fold_stream_batch(
-                    slices[s], bid, path, "id", "cost", "gain", 7
-                )
+                guarded_fold(slices[s], bid, path, fold)
         got = sorted(
-            map(tuple, read_skyline_state(spark, path).collect())
+            map(tuple, read_state(spark, path).collect())
         )
         assert got == want, sub
 

@@ -310,10 +310,14 @@ def test_streaming_auc_census_fold(spark, tmp_path):
     batching — including replayed batches (guard no-ops) and
     SCRAMBLED batch order (the census is additive and order-free,
     unlike the ordered-fold IVM tier)."""
-    from etl_pipeline_last_fm_spark.operators.evalmetrics import roc_auc
-    from etl_pipeline_last_fm_spark.streaming.drift import (
-        auc_census_fold_batch,
-        read_auc,
+    from etl_pipeline_last_fm_spark.operators.evalmetrics import (
+        auc_from_census,
+        roc_auc,
+    )
+    from etl_pipeline_last_fm_spark.streaming.drift import auc_census_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import (
+        guarded_fold,
+        read_state,
     )
 
     rows = [(i % 3 == 0, (i * 17) % 40) for i in range(30)]
@@ -325,12 +329,13 @@ def test_streaming_auc_census_fold(spark, tmp_path):
 
     path = str(tmp_path / "auc")
     # scrambled delivery: slice 2 as batch 0, slice 0 as 1, slice 1 as 2
-    auc_census_fold_batch(slices[2], 0, path)
-    auc_census_fold_batch(slices[2], 0, path)  # replay no-ops
-    auc_census_fold_batch(slices[0], 1, path)
-    auc_census_fold_batch(slices[1], 2, path)
-    auc_census_fold_batch(slices[1], 2, path)  # replay no-ops
-    assert tuple(read_auc(spark, path).first()) == want
+    fold = auc_census_fold_batch
+    guarded_fold(slices[2], 0, path, fold)
+    guarded_fold(slices[2], 0, path, fold)  # replay no-ops
+    guarded_fold(slices[0], 1, path, fold)
+    guarded_fold(slices[1], 2, path, fold)
+    guarded_fold(slices[1], 2, path, fold)  # replay no-ops
+    assert tuple(auc_from_census(read_state(spark, path)).first()) == want
 
 
 def test_calibration_ece_pinned_and_reference(spark):

@@ -8,10 +8,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_pipeline_last_fm_spark.streaming.ivm import (
-    join_fold_batch,
-    read_join_state,
-    streaming_join_maintenance,
+from etl_pipeline_last_fm_spark.streaming.ivm import join_fold_batch
+from etl_pipeline_last_fm_spark.streaming.sketch import (
+    fold_stream,
+    guarded_fold,
+    read_state,
 )
 
 SCHEMA = "side string, k long, a_val string, b_val long"
@@ -39,7 +40,7 @@ def test_stream_fold_equals_one_shot_join(spark, tmp_path):
     root = str(tmp_path / "jst")
     for i, b in enumerate(_batches(spark)):
         join_fold_batch(b, i, root, ["k"])
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     assert got == WANT
 
 
@@ -51,7 +52,7 @@ def test_stream_fold_replay_is_noop(spark, tmp_path):
     join_fold_batch(batches[1], 1, root, ["k"])
     join_fold_batch(batches[2], 2, root, ["k"])
     join_fold_batch(batches[2], 2, root, ["k"])  # replay
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     assert got == WANT
 
 
@@ -69,7 +70,7 @@ def test_stream_fold_crash_between_side_and_m_commit(spark, tmp_path):
     # "crash": the m commit for batch 2 is lost; a/b v=2 survive.
     shutil.rmtree(tmp_path / "jst" / "m" / "_v=2")
     join_fold_batch(batches[2], 2, root, ["k"])  # replay after restart
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     assert got == WANT
 
 
@@ -88,14 +89,15 @@ def test_streaming_join_maintenance_end_to_end(spark, tmp_path):
     )
     root = str(tmp_path / "jst")
     q = (
-        streaming_join_maintenance(
-            stream, root, ["k"], checkpoint=str(tmp_path / "ck")
+        fold_stream(
+            stream, root, ["k"], checkpoint=str(tmp_path / "ck"),
+            protocol=join_fold_batch,
         )
         .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(180)
-    got = sorted(map(tuple, read_join_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/m").collect()))
     a = _tagged(spark, rows).filter("side = 'a'").select("k", "a_val")
     b = _tagged(spark, rows).filter("side = 'b'").select("k", "b_val")
     want = sorted(map(tuple, a.join(b, "k").collect()))
@@ -151,17 +153,14 @@ def _want_ema(spark, slices):
 
 
 def test_ema_stream_fold_equals_one_shot(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     path = str(tmp_path / "ema")
     slices = _ema_slices(spark)
     for i, b in enumerate(slices):
-        ema_fold_stream_batch(b, i, path)
+        guarded_fold(b, i, path, ema_fold_batch)
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -172,21 +171,18 @@ def test_ema_stream_fold_replay_is_noop_and_empty_batch_advances(spark, tmp_path
     idempotent — a double fold halves the state again), and an EMPTY
     micro-batch must advance the guard while leaving every key's state
     unchanged."""
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     path = str(tmp_path / "ema")
     slices = _ema_slices(spark)
-    ema_fold_stream_batch(slices[0], 0, path)
-    ema_fold_stream_batch(slices[0], 0, path)  # replay
-    ema_fold_stream_batch(slices[1], 1, path)
-    ema_fold_stream_batch(slices[1].limit(0), 2, path)  # empty batch
-    ema_fold_stream_batch(slices[2], 3, path)
-    ema_fold_stream_batch(slices[2], 3, path)  # replay
+    guarded_fold(slices[0], 0, path, ema_fold_batch)
+    guarded_fold(slices[0], 0, path, ema_fold_batch)  # replay
+    guarded_fold(slices[1], 1, path, ema_fold_batch)
+    guarded_fold(slices[1].limit(0), 2, path, ema_fold_batch)  # empty batch
+    guarded_fold(slices[2], 3, path, ema_fold_batch)
+    guarded_fold(slices[2], 3, path, ema_fold_batch)  # replay
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -199,22 +195,19 @@ def test_ema_stream_fold_out_of_order_batch_raises(spark, tmp_path):
     pre-violation version and accepts a corrected batch."""
     import pytest
 
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     path = str(tmp_path / "ema")
     slices = _ema_slices(spark)
-    ema_fold_stream_batch(slices[0], 0, path)
+    guarded_fold(slices[0], 0, path, ema_fold_batch)
     stale = _ev(spark, [(1, 9, 1, 99.0)])  # day 1 <= user 1's day-2 frontier
     with pytest.raises(Exception, match="out-of-order"):
-        ema_fold_stream_batch(stale, 1, path)
+        guarded_fold(stale, 1, path, ema_fold_batch)
     # the violating batch must not have committed as v=1
-    ema_fold_stream_batch(slices[1], 1, path)
-    ema_fold_stream_batch(slices[2], 2, path)
+    guarded_fold(slices[1], 1, path, ema_fold_batch)
+    guarded_fold(slices[2], 2, path, ema_fold_batch)
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -227,10 +220,7 @@ def test_streaming_ema_maintenance_end_to_end(spark, tmp_path):
     make FileStreamSource deliver slices oldest-first."""
     import os
 
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_ema_state,
-        streaming_ema_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     slices = _ema_slices(spark)
     src = tmp_path / "src"
@@ -250,13 +240,13 @@ def test_streaming_ema_maintenance_end_to_end(spark, tmp_path):
     )
     path = str(tmp_path / "ema")
     q = (
-        streaming_ema_maintenance(stream, path, checkpoint=str(tmp_path / "ck"))
+        fold_stream(stream, path, ema_fold_batch, checkpoint=str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(180)
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, slices)
@@ -269,25 +259,28 @@ def test_cusum_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     without committing."""
     import pytest
 
-    from etl_pipeline_last_fm_spark.operators.timeseries import cusum_alarms
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        cusum_fold_stream_batch,
-        read_cusum_state,
+    from etl_pipeline_last_fm_spark.operators.timeseries import (
+        cusum_alarms,
+        cusum_fold_batch,
     )
 
     path = str(tmp_path / "cusum")
     slices = _ema_slices(spark)
     kw = dict(drift_cents=100, threshold_cents=400)
-    cusum_fold_stream_batch(slices[0], 0, path, **kw)
-    cusum_fold_stream_batch(slices[0], 0, path, **kw)  # replay
+
+    def fold(s, b):
+        return cusum_fold_batch(s, b, **kw)
+
+    guarded_fold(slices[0], 0, path, fold)
+    guarded_fold(slices[0], 0, path, fold)  # replay
     stale = _ev(spark, [(1, 9, 1, 99.0)])  # at/before user 1's frontier
     with pytest.raises(Exception, match="out-of-order"):
-        cusum_fold_stream_batch(stale, 1, path, **kw)
-    cusum_fold_stream_batch(slices[1], 1, path, **kw)
-    cusum_fold_stream_batch(slices[2], 2, path, **kw)
-    cusum_fold_stream_batch(slices[2], 2, path, **kw)  # replay
+        guarded_fold(stale, 1, path, fold)
+    guarded_fold(slices[1], 1, path, fold)
+    guarded_fold(slices[2], 2, path, fold)
+    guarded_fold(slices[2], 2, path, fold)  # replay
     got = sorted(
-        map(tuple, read_cusum_state(spark, path).select(
+        map(tuple, read_state(spark, path).select(
             "key", "n_events", "cusum_final", "cusum_max", "n_alarms"
         ).collect())
     )
@@ -306,12 +299,10 @@ def test_attribution_stream_two_state_protocol(spark, tmp_path):
     import shutil
 
     from etl_pipeline_last_fm_spark.operators.attribution import (
+        attribution_fold_batch,
         last_touch_attribution,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        attribution_fold_stream_batch,
-        read_attribution_state,
-    )
+    from etl_pipeline_last_fm_spark.streaming.ivm import _two_state_stream_fold
 
     def _tev(spark, rows):
         return spark.createDataFrame(
@@ -329,20 +320,20 @@ def test_attribution_stream_two_state_protocol(spark, tmp_path):
     s2 = _tev(spark, [(1, 12, 20, "purchase", 2.0)])
     slices = [s0, s1, s2]
     root = str(tmp_path / "attr")
-    attribution_fold_stream_batch(slices[0], 0, root)
-    attribution_fold_stream_batch(slices[0], 0, root)  # replay
-    attribution_fold_stream_batch(slices[1], 1, root)
-    attribution_fold_stream_batch(slices[2], 2, root)
-    attribution_fold_stream_batch(slices[2], 2, root)  # replay
+    _two_state_stream_fold(slices[0], 0, root, attribution_fold_batch)
+    _two_state_stream_fold(slices[0], 0, root, attribution_fold_batch)  # replay
+    _two_state_stream_fold(slices[1], 1, root, attribution_fold_batch)
+    _two_state_stream_fold(slices[2], 2, root, attribution_fold_batch)
+    _two_state_stream_fold(slices[2], 2, root, attribution_fold_batch)  # replay
     union = s0.unionByName(s1).unionByName(s2)
     want = sorted(map(tuple, last_touch_attribution(union).collect()))
-    got = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got == want
     assert ("none", 2, 800) in got  # the stale + the touchless purchase
     # crash window: the totals commit for batch 2 is lost; k v=2 survives
     shutil.rmtree(tmp_path / "attr" / "c" / "_v=2")
-    attribution_fold_stream_batch(slices[2], 2, root)
-    got2 = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    _two_state_stream_fold(slices[2], 2, root, attribution_fold_batch)
+    got2 = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got2 == want
 
 
@@ -354,12 +345,10 @@ def test_decay_attribution_stream_two_state_protocol(spark, tmp_path):
     import shutil
 
     from etl_pipeline_last_fm_spark.operators.attribution import (
+        decay_attribution_fold_batch,
         time_decay_attribution,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        decay_attribution_fold_stream_batch,
-        read_attribution_state,
-    )
+    from etl_pipeline_last_fm_spark.streaming.ivm import _two_state_stream_fold
 
     def _tev(spark, rows):
         return spark.createDataFrame(
@@ -378,16 +367,16 @@ def test_decay_attribution_stream_two_state_protocol(spark, tmp_path):
     slices = [s0, s1, s2]
     root = str(tmp_path / "dattr")
     for i, b in enumerate(slices):
-        decay_attribution_fold_stream_batch(b, i, root)
-        decay_attribution_fold_stream_batch(b, i, root)  # replay
+        _two_state_stream_fold(b, i, root, decay_attribution_fold_batch)
+        _two_state_stream_fold(b, i, root, decay_attribution_fold_batch)  # replay
     union = s0.unionByName(s1).unionByName(s2)
     want = sorted(map(tuple, time_decay_attribution(union).collect()))
-    got = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    got = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got == want
     # crash window: totals commit for batch 2 lost; k v=2 survives
     shutil.rmtree(tmp_path / "dattr" / "c" / "_v=2")
-    decay_attribution_fold_stream_batch(slices[2], 2, root)
-    got2 = sorted(map(tuple, read_attribution_state(spark, root).collect()))
+    _two_state_stream_fold(slices[2], 2, root, decay_attribution_fold_batch)
+    got2 = sorted(map(tuple, read_state(spark, f"{root}/c").collect()))
     assert got2 == want
 
 
@@ -403,25 +392,22 @@ def test_twap_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
     from etl_pipeline_last_fm_spark.operators.segments import (
         present_twap_state,
         time_weighted_avg,
-    )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        read_twap_state,
-        twap_fold_stream_batch,
+        twap_fold_batch,
     )
 
     path = str(tmp_path / "twap")
     slices = _ema_slices(spark)
-    twap_fold_stream_batch(slices[0], 0, path)
-    twap_fold_stream_batch(slices[0], 0, path)  # replay
+    guarded_fold(slices[0], 0, path, twap_fold_batch)
+    guarded_fold(slices[0], 0, path, twap_fold_batch)  # replay
     stale = _ev(spark, [(1, 9, 1, 99.0)])  # at/before user 1's frontier
     with pytest.raises(Exception, match="out-of-order"):
-        twap_fold_stream_batch(stale, 1, path)
-    twap_fold_stream_batch(slices[1], 1, path)
-    twap_fold_stream_batch(slices[1].limit(0), 2, path)  # empty batch
-    twap_fold_stream_batch(slices[2], 3, path)
-    twap_fold_stream_batch(slices[2], 3, path)  # replay
+        guarded_fold(stale, 1, path, twap_fold_batch)
+    guarded_fold(slices[1], 1, path, twap_fold_batch)
+    guarded_fold(slices[1].limit(0), 2, path, twap_fold_batch)  # empty batch
+    guarded_fold(slices[2], 3, path, twap_fold_batch)
+    guarded_fold(slices[2], 3, path, twap_fold_batch)  # replay
     got = sorted(
-        map(tuple, present_twap_state(read_twap_state(spark, path)).collect())
+        map(tuple, present_twap_state(read_state(spark, path)).collect())
     )
     union = slices[0]
     for s in slices[1:]:
@@ -431,57 +417,107 @@ def test_twap_stream_fold_identity_replay_and_out_of_order(spark, tmp_path):
 
 
 def test_single_state_replay_after_partial_commit(spark, tmp_path):
-    """VERDICT r7 item 5: the single-state twins' crash window. A crash
-    DURING the v=N state append leaves a marker-less (no _SUCCESS),
-    possibly content-mangled _v=N directory; the replayed fold must
-    ignore the partial (list_state_versions skips marker-less dirs),
-    read the pre-batch snapshot, and recommit v=N — final state equal to
-    a clean three-batch fold for EVERY single-state member (ema, twap,
-    holt). The other half of the window — v=N committed but the
-    streaming checkpoint offset not — is the replay-noop already pinned
-    by the per-member identity tests."""
+    """VERDICT r7 item 5: the single-state crash window. A crash DURING
+    the v=N state append leaves a marker-less (no _SUCCESS), possibly
+    content-mangled _v=N directory; the replayed fold must ignore the
+    partial (list_state_versions skips marker-less dirs), read the
+    pre-batch snapshot, and recommit v=N — final state equal to a clean
+    three-batch fold for EVERY member that shares guarded_fold: the
+    ordered folds (ema, cusum, twap, holt), the frontier fold (skyline)
+    and the additive sinks (mart, cms, kmv, census). The other half of
+    the window — v=N committed but the streaming checkpoint offset not —
+    is the replay-noop already pinned by the per-member identity
+    tests."""
     import os
-    import shutil
 
+    from etl_pipeline_last_fm_spark.operators.incremental import (
+        additive_state,
+        present,
+    )
     from etl_pipeline_last_fm_spark.operators.segments import (
         present_twap_state,
         time_weighted_avg,
+        twap_fold_batch,
     )
+    from etl_pipeline_last_fm_spark.operators.sketch import cms_counters, kmv_state
+    from etl_pipeline_last_fm_spark.operators.skyline import (
+        skyline_2d,
+        skyline_fold_batch,
+    )
+    from etl_pipeline_last_fm_spark.operators.text import token_census
     from etl_pipeline_last_fm_spark.operators.timeseries import (
+        cusum_alarms,
+        cusum_fold_batch,
+        ema_fold_batch,
         ema_halflife,
+        holt_fold_batch,
         holt_linear,
         present_holt_state,
     )
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        holt_fold_stream_batch,
-        read_ema_state,
-        read_holt_state,
-        read_twap_state,
-        twap_fold_stream_batch,
-    )
+    from etl_pipeline_last_fm_spark.streaming.drift import census_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.kmv_stream import kmv_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.marts import mart_fold_batch
+    from etl_pipeline_last_fm_spark.streaming.sketch import cms_fold_batch
 
-    slices = _ema_slices(spark)
-    union = slices[0]
-    for s in slices[1:]:
-        union = union.unionByName(s)
+    def union_of(slices):
+        out = slices[0]
+        for s in slices[1:]:
+            out = out.unionByName(s)
+        return out
 
-    members = [
-        ("ema", ema_fold_stream_batch,
-         lambda st: st.select("key", "n_events", "ema_cents"),
-         lambda: ema_halflife(union)),
-        ("twap", twap_fold_stream_batch,
-         present_twap_state,
-         lambda: time_weighted_avg(union)),
-        ("holt", holt_fold_stream_batch,
-         present_holt_state,
-         lambda: holt_linear(union)),
+    ev = _ema_slices(spark)
+    cusum_kw = dict(drift_cents=100, threshold_cents=400)
+    toks = [s.select(F.col("user_id").cast("string").alias("tok")) for s in ev]
+    pts = [
+        s.select(
+            "event_id",
+            F.col("user_id").alias("cost"),
+            F.round(F.col("value") * 100).cast("long").alias("gain"),
+        )
+        for s in ev
     ]
-    for name, fold, present, one_shot in members:
+    docs = [
+        spark.createDataFrame(rows, "doc_id long, source string, text string")
+        for rows in ([(1, "a", "x x y"), (2, "b", "x z")],
+                     [(3, "a", "y z")],
+                     [(4, "c", "p q"), (5, "b", "q x")])
+    ]
+
+    def ident(df):
+        return df
+
+    # (name, slices, fold_fn, present, one-shot over the union)
+    members = [
+        ("ema", ev, ema_fold_batch,
+         lambda st: st.select("key", "n_events", "ema_cents"),
+         lambda u: ema_halflife(u)),
+        ("cusum", ev, lambda st, b: cusum_fold_batch(st, b, **cusum_kw),
+         lambda st: st.select(
+             "key", "n_events", "cusum_final", "cusum_max", "n_alarms"),
+         lambda u: cusum_alarms(u, **cusum_kw)),
+        ("twap", ev, twap_fold_batch, present_twap_state,
+         lambda u: time_weighted_avg(u)),
+        ("holt", ev, holt_fold_batch, present_holt_state,
+         lambda u: holt_linear(u)),
+        ("skyline", pts,
+         lambda st, b: skyline_fold_batch(st, b, "event_id", "cost", "gain",
+                                          bucket_width=1),
+         ident,
+         lambda u: skyline_2d(u, "event_id", "cost", "gain", bucket_width=1)),
+        ("mart", ev, lambda st, b: mart_fold_batch(st, b, ["user_id"], "value"),
+         lambda st: present(st, ["user_id"]),
+         lambda u: present(additive_state(u, ["user_id"], "value"),
+                           ["user_id"])),
+        ("cms", toks, cms_fold_batch, ident, lambda u: cms_counters(u, "tok")),
+        ("kmv", ev, lambda st, b: kmv_fold_batch(st, b, "value", ["user_id"]),
+         ident, lambda u: kmv_state(u, "value", ["user_id"])),
+        ("census", docs, census_fold_batch, ident, token_census),
+    ]
+    for name, slices, fold, present_fn, one_shot in members:
         path = str(tmp_path / name)
-        fold(slices[0], 0, path)
-        fold(slices[1], 1, path)
-        fold(slices[2], 2, path)
+        guarded_fold(slices[0], 0, path, fold)
+        guarded_fold(slices[1], 1, path, fold)
+        guarded_fold(slices[2], 2, path, fold)
         # "crash mid-append": v=2 loses its _SUCCESS marker and a part
         # file — a torn write no reader may trust.
         v2 = tmp_path / name / "_v=2"
@@ -492,11 +528,10 @@ def test_single_state_replay_after_partial_commit(spark, tmp_path):
                 break
         # restart replays batch 2: the guard must NOT see the partial as
         # applied, and the fold must read the v<2 snapshot, not the torn dir.
-        fold(slices[2], 2, path)
-        read = {"ema": read_ema_state, "twap": read_twap_state,
-                "holt": read_holt_state}[name]
-        got = sorted(map(tuple, present(read(spark, path)).collect()))
-        want = sorted(map(tuple, one_shot().collect()))
+        guarded_fold(slices[2], 2, path, fold)
+        got = sorted(map(tuple, present_fn(read_state(spark, path)).collect()))
+        want = sorted(map(tuple, one_shot(union_of(slices)).collect()))
+        assert got, name
         assert got == want, name
         # the recommitted v=2 is whole again (marker restored)
         assert (v2 / "_SUCCESS").exists(), name
@@ -509,20 +544,16 @@ def test_single_state_crash_before_first_commit_replays_clean(spark, tmp_path):
     v=0."""
     import os
 
-    from etl_pipeline_last_fm_spark.operators.timeseries import ema_halflife
-    from etl_pipeline_last_fm_spark.streaming.ivm import (
-        ema_fold_stream_batch,
-        read_ema_state,
-    )
+    from etl_pipeline_last_fm_spark.operators.timeseries import ema_fold_batch
 
     slices = _ema_slices(spark)
     path = str(tmp_path / "ema0")
-    ema_fold_stream_batch(slices[0], 0, path)
+    guarded_fold(slices[0], 0, path, ema_fold_batch)
     v0 = tmp_path / "ema0" / "_v=0"
     os.remove(v0 / "_SUCCESS")
-    ema_fold_stream_batch(slices[0], 0, path)  # replay from empty
+    guarded_fold(slices[0], 0, path, ema_fold_batch)  # replay from empty
     got = sorted(
-        map(tuple, read_ema_state(spark, path)
+        map(tuple, read_state(spark, path)
             .select("key", "n_events", "ema_cents").collect())
     )
     assert got == _want_ema(spark, [slices[0]])

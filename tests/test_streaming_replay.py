@@ -10,18 +10,15 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_last_fm_spark.operators.incremental import present
 from etl_pipeline_last_fm_spark.operators.sketch import cms_counters
-from etl_pipeline_last_fm_spark.streaming.marts import (
-    mart_fold_batch,
-    read_state,
-)
+from etl_pipeline_last_fm_spark.streaming.marts import mart_fold_batch
 from etl_pipeline_last_fm_spark.streaming.sketch import (
     _read_state_or_none,
     cms_fold_batch,
+    guarded_fold,
     hll_fold_batch,
     last_applied_batch,
     merge_cms_grids,
-    read_cms_state,
-    read_hll_state,
+    read_state,
 )
 
 
@@ -33,31 +30,35 @@ def _grid_map(df):
     return {(r["__d"], r["__cell"]): r["__cnt"] for r in df.collect()}
 
 
+def _cms(state, batch):
+    return cms_fold_batch(state, batch, depth=2, width=16)
+
+
 def test_cms_fold_replay_is_noop(spark, tmp_path):
     state = str(tmp_path / "cms_state")
     b0 = _toks(spark, ["a", "b", "a"])
     b1 = _toks(spark, ["b", "c"])
 
-    cms_fold_batch(b0, 0, state, depth=2, width=16)
-    after_b0 = _grid_map(read_cms_state(spark, state))
+    guarded_fold(b0, 0, state, _cms)
+    after_b0 = _grid_map(read_state(spark, state))
 
     # Replay of batch 0 (same batch_id) must not inflate any cell.
-    cms_fold_batch(b0, 0, state, depth=2, width=16)
-    assert _grid_map(read_cms_state(spark, state)) == after_b0
+    guarded_fold(b0, 0, state, _cms)
+    assert _grid_map(read_state(spark, state)) == after_b0
 
     # A genuinely new batch still folds in...
-    cms_fold_batch(b1, 1, state, depth=2, width=16)
+    guarded_fold(b1, 1, state, _cms)
     want = _grid_map(
         merge_cms_grids(
             cms_counters(b0, depth=2, width=16),
             cms_counters(b1, depth=2, width=16),
         )
     )
-    assert _grid_map(read_cms_state(spark, state)) == want
+    assert _grid_map(read_state(spark, state)) == want
 
     # ...and replaying IT is again a no-op.
-    cms_fold_batch(b1, 1, state, depth=2, width=16)
-    assert _grid_map(read_cms_state(spark, state)) == want
+    guarded_fold(b1, 1, state, _cms)
+    assert _grid_map(read_state(spark, state)) == want
     assert last_applied_batch(_read_state_or_none(spark, state)) == 1
 
 
@@ -69,10 +70,13 @@ def test_mart_fold_replay_is_noop(spark, tmp_path):
     )
     b1 = spark.createDataFrame([("view", 5.0)], "event_type string, value double")
 
-    mart_fold_batch(b0, 0, state, ["event_type"], "value")
-    mart_fold_batch(b0, 0, state, ["event_type"], "value")  # replay
-    mart_fold_batch(b1, 1, state, ["event_type"], "value")
-    mart_fold_batch(b1, 1, state, ["event_type"], "value")  # replay
+    def fold(st, b):
+        return mart_fold_batch(st, b, ["event_type"], "value")
+
+    guarded_fold(b0, 0, state, fold)
+    guarded_fold(b0, 0, state, fold)  # replay
+    guarded_fold(b1, 1, state, fold)
+    guarded_fold(b1, 1, state, fold)  # replay
 
     got = {
         r["event_type"]: (r["value_sum"], r["n_rows"])
@@ -89,10 +93,13 @@ def test_hll_fold_replay_guard(spark, tmp_path):
         [("click", 1), ("click", 2), ("view", 1)],
         "event_type string, user_id long",
     )
-    hll_fold_batch(b0, 0, state, "user_id", ["event_type"], b=4)
-    regs = sorted(map(tuple, read_hll_state(spark, state).collect()))
-    hll_fold_batch(b0, 0, state, "user_id", ["event_type"], b=4)
-    assert sorted(map(tuple, read_hll_state(spark, state).collect())) == regs
+    def fold(st, batch):
+        return hll_fold_batch(st, batch, "user_id", ["event_type"], b=4)
+
+    guarded_fold(b0, 0, state, fold)
+    regs = sorted(map(tuple, read_state(spark, state).collect()))
+    guarded_fold(b0, 0, state, fold)
+    assert sorted(map(tuple, read_state(spark, state).collect())) == regs
     assert last_applied_batch(_read_state_or_none(spark, state)) == 0
 
 
@@ -101,46 +108,52 @@ def _docs(spark, rows):
 
 
 def test_census_fold_replay_and_equivalence(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.operators.text import corpus_drift
-    from etl_pipeline_last_fm_spark.streaming.drift import (
-        census_fold_batch,
-        read_drift,
+    from etl_pipeline_last_fm_spark.operators.text import (
+        corpus_drift,
+        tv_from_census,
     )
+    from etl_pipeline_last_fm_spark.streaming.drift import census_fold_batch
+
+    def read_drift(spark, state):
+        return tv_from_census(read_state(spark, state))
 
     state = str(tmp_path / "census_state")
     b0 = _docs(spark, [(1, "a", "x x y"), (2, "b", "x z")])
     b1 = _docs(spark, [(3, "a", "y z"), (4, "c", "p q")])
 
-    census_fold_batch(b0, 0, state)
+    guarded_fold(b0, 0, state, census_fold_batch)
     once = sorted(map(tuple, read_drift(spark, state).collect()))
 
     # Replay of batch 0 must be a no-op (census sums are NOT idempotent).
-    census_fold_batch(b0, 0, state)
+    guarded_fold(b0, 0, state, census_fold_batch)
     assert sorted(map(tuple, read_drift(spark, state).collect())) == once
 
     # Folding a new batch: stream state == batch corpus_drift of the union.
-    census_fold_batch(b1, 1, state)
+    guarded_fold(b1, 1, state, census_fold_batch)
     want = sorted(map(tuple, corpus_drift(b0.unionByName(b1)).collect()))
     assert sorted(map(tuple, read_drift(spark, state).collect())) == want
 
 
 def test_postings_fold_replay_and_equivalence(spark, tmp_path):
-    from etl_pipeline_last_fm_spark.operators.text import inverted_index
-    from etl_pipeline_last_fm_spark.streaming.drift import (
-        postings_fold_batch,
-        read_inverted_index,
+    from etl_pipeline_last_fm_spark.operators.text import (
+        inverted_index,
+        render_inverted_index,
     )
+    from etl_pipeline_last_fm_spark.streaming.drift import postings_fold_batch
+
+    def read_inverted_index(spark, state, min_df):
+        return render_inverted_index(read_state(spark, state), min_df)
 
     state = str(tmp_path / "postings_state")
     b0 = _docs(spark, [(1, "a", "x y x"), (2, "b", "x z")])
     b1 = _docs(spark, [(3, "a", "y z q"), (4, "c", "x")])
 
-    postings_fold_batch(b0, 0, state)
+    guarded_fold(b0, 0, state, postings_fold_batch)
     once = sorted(map(tuple, read_inverted_index(spark, state, min_df=1).collect()))
-    postings_fold_batch(b0, 0, state)  # replay must be a no-op
+    guarded_fold(b0, 0, state, postings_fold_batch)  # replay must be a no-op
     assert sorted(map(tuple, read_inverted_index(spark, state, min_df=1).collect())) == once
 
-    postings_fold_batch(b1, 1, state)
+    guarded_fold(b1, 1, state, postings_fold_batch)
     want = sorted(
         map(tuple, inverted_index(b0.unionByName(b1), min_df=1).collect())
     )
@@ -155,7 +168,6 @@ def test_checksum_fold_replay_and_equivalence(spark, tmp_path):
     from etl_pipeline_last_fm_spark.streaming.drift import (
         checksum_fold_batch,
         checksum_state,
-        read_checksum,
     )
 
     def hashed(rows):
@@ -166,14 +178,14 @@ def test_checksum_fold_replay_and_equivalence(spark, tmp_path):
     b0 = ["alpha", "beta", "gamma", "delta"]
     b1 = ["epsilon", "zeta"]
 
-    checksum_fold_batch(hashed(b0), 0, state)
-    once = sorted(map(tuple, read_checksum(spark, state).collect()))
-    checksum_fold_batch(hashed(b0), 0, state)  # replay no-op
-    assert sorted(map(tuple, read_checksum(spark, state).collect())) == once
+    guarded_fold(hashed(b0), 0, state, checksum_fold_batch)
+    once = sorted(map(tuple, read_state(spark, state).collect()))
+    guarded_fold(hashed(b0), 0, state, checksum_fold_batch)  # replay no-op
+    assert sorted(map(tuple, read_state(spark, state).collect())) == once
 
-    checksum_fold_batch(hashed(b1), 1, state)
+    guarded_fold(hashed(b1), 1, state, checksum_fold_batch)
     want = sorted(map(tuple, checksum_state(hashed(b0 + b1)).collect()))
-    assert sorted(map(tuple, read_checksum(spark, state).collect())) == want
+    assert sorted(map(tuple, read_state(spark, state).collect())) == want
 
 
 def test_commit_crash_safety_partial_snapshot_ignored(spark, tmp_path):
@@ -190,8 +202,8 @@ def test_commit_crash_safety_partial_snapshot_ignored(spark, tmp_path):
     b0 = _toks(spark, ["a", "b", "a"])
     b1 = _toks(spark, ["b", "c"])
 
-    cms_fold_batch(b0, 0, state, depth=2, width=16)
-    after_b0 = _grid_map(read_cms_state(spark, state))
+    guarded_fold(b0, 0, state, _cms)
+    after_b0 = _grid_map(read_state(spark, state))
 
     # Simulate the crash: batch 1's snapshot dir exists with data but no
     # _SUCCESS marker (write died between part files and commit marker).
@@ -201,19 +213,19 @@ def test_commit_crash_safety_partial_snapshot_ignored(spark, tmp_path):
 
     # Reader ignores the partial; state is still exactly post-batch-0.
     assert [v for v, _ in list_state_versions(spark, state)] == [0]
-    assert _grid_map(read_cms_state(spark, state)) == after_b0
+    assert _grid_map(read_state(spark, state)) == after_b0
     assert last_applied_batch(_read_state_or_none(spark, state)) == 0
 
     # The streaming replay of batch 1 re-runs, clobbers its own partial,
     # and commits on top of the intact previous snapshot.
-    cms_fold_batch(b1, 1, state, depth=2, width=16)
+    guarded_fold(b1, 1, state, _cms)
     want = _grid_map(
         merge_cms_grids(
             cms_counters(b0, depth=2, width=16),
             cms_counters(b1, depth=2, width=16),
         )
     )
-    assert _grid_map(read_cms_state(spark, state)) == want
+    assert _grid_map(read_state(spark, state)) == want
     assert [v for v, _ in list_state_versions(spark, state)] == [0, 1]
 
 
@@ -227,7 +239,7 @@ def test_commit_retention_prunes_old_snapshots(spark, tmp_path):
     state = str(tmp_path / "cms_state")
     batches = [["a"], ["b", "b"], ["c"], ["a", "c"]]
     for i, words in enumerate(batches):
-        cms_fold_batch(_toks(spark, words), i, state, depth=2, width=16)
+        guarded_fold(_toks(spark, words), i, state, _cms)
 
     # retention = 2: only the two newest snapshots survive...
     assert [v for v, _ in list_state_versions(spark, state)] == [2, 3]
@@ -235,7 +247,7 @@ def test_commit_retention_prunes_old_snapshots(spark, tmp_path):
     want = _grid_map(
         cms_counters(_toks(spark, sum(batches, [])), depth=2, width=16)
     )
-    assert _grid_map(read_cms_state(spark, state)) == want
+    assert _grid_map(read_state(spark, state)) == want
 
 
 def test_legacy_flat_state_layout_raises(spark, tmp_path):

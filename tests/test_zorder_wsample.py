@@ -16,10 +16,10 @@ from etl_pipeline_last_fm_spark.operators.zorder import (
 )
 from etl_pipeline_last_fm_spark.sources.tables import load_table
 from etl_pipeline_last_fm_spark.streaming.sketch import (
+    cms_fold_batch,
+    fold_stream,
     merge_cms_grids,
-    read_cms_state,
-    read_hll_state,
-    streaming_cms_maintenance,
+    read_state,
 )
 
 
@@ -122,8 +122,10 @@ def test_streaming_cms_equals_batch_sketch(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_cms_maintenance(
-            stream, state, depth=2, width=64,
+        fold_stream(
+            stream,
+            state,
+            lambda s, b: cms_fold_batch(s, b, depth=2, width=64),
             checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)
@@ -133,7 +135,7 @@ def test_streaming_cms_equals_batch_sketch(spark, sf_dir, tmp_path):
 
     got = {
         (r["__d"], r["__cell"]): r["__cnt"]
-        for r in read_cms_state(spark, state).collect()
+        for r in read_state(spark, state).collect()
     }
     want = {
         (r["__d"], r["__cell"]): r["__cnt"]
@@ -164,9 +166,7 @@ def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
         hll_distinct,
         hll_estimate_from_registers,
     )
-    from etl_pipeline_last_fm_spark.streaming.sketch import (
-        streaming_hll_maintenance,
-    )
+    from etl_pipeline_last_fm_spark.streaming.sketch import hll_fold_batch
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     src = str(tmp_path / "ev_files")
@@ -179,9 +179,13 @@ def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming_hll_maintenance(
-            stream, state, value_col="user_id", group_cols=["event_type"],
-            b=6, checkpoint=str(tmp_path / "ck"),
+        fold_stream(
+            stream,
+            state,
+            lambda s, batch: hll_fold_batch(
+                s, batch, value_col="user_id", group_cols=["event_type"], b=6
+            ),
+            checkpoint=str(tmp_path / "ck"),
         )
         .trigger(availableNow=True)
         .start()
@@ -192,7 +196,7 @@ def test_streaming_hll_equals_batch_estimate(spark, sf_dir, tmp_path):
         map(
             tuple,
             hll_estimate_from_registers(
-                read_hll_state(spark, state), ["event_type"], b=6
+                read_state(spark, state), ["event_type"], b=6
             ).collect(),
         )
     )
